@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): runs the query inventory on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line. Protocol mirrors
@@ -11,7 +11,8 @@ import org.apache.spark.sql.SparkSession
   * back-to-back runs inside one visit shared the load window. The
   * noise flag compares passes 2 and 3 only (both warm), so it detects
   * machine events rather than pass-1 JIT warmup. Single local
-  * session, UTC, UI off.
+  * session, UTC, UI off. A lane that fails in any pass is named in
+  * the line's `errors` map, and the run then exits 1.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -25,7 +26,35 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val (line, errors) = run(spark, sfDir, SparkEntry.queries.toSeq)
+    println(line)
+    // Self-capture: the driver tails stdout and has truncated the head
+    // two rounds running; the file copy preserves every entry.
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), line + "\n")
+    catch { case _: Throwable => () }
+    spark.stop()
+    if (errors.nonEmpty) {
+      System.err.println(s"[bench] ${errors.size} lane(s) failed: " +
+        errors.map { case (n, c) => s"$n ($c)" }.mkString(", "))
+      sys.exit(1)
+    }
+  }
 
+  /** Class name of the innermost cause — the error a lane actually hit
+    * under Spark's job-failure wrapping. */
+  def errorClass(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq.last.getClass.getName
+
+  /** Warmup, gates and passes over `lanes`: the JSON line plus the
+    * lane -> error class map of every lane that failed in some pass. */
+  def run(
+      spark: SparkSession,
+      sfDir: String,
+      lanes: Seq[(String, (SparkSession, String) => DataFrame)],
+      loadGateMax: Double =
+        // malformed override must not crash the bench before any pass runs
+        sys.env.get("SPARK_GRAFT_LOAD_GATE").flatMap(_.toDoubleOption).getOrElse(2.0)
+  ): (String, Map[String, String]) = {
     // Full evaluation through the no-op sink: every output column is
     // computed and discarded. Through r13 the action was .count(),
     // which let the optimizer PRUNE final-projection columns — real
@@ -44,10 +73,11 @@ object Bench {
     def time(fn: => Unit): Double = {
       val t0 = System.nanoTime(); fn; (System.nanoTime() - t0) / 1e9
     }
-    def pass(): Seq[(String, Double)] = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def pass(): Seq[(String, Double)] = lanes.sortBy(_._1).map { case (name, fn) =>
       val secs =
         try time(evaluate(fn(spark, sfDir)))
-        catch { case _: Throwable => -1.0 }
+        catch { case e: Throwable => errors.getOrElseUpdate(name, errorClass(e)); -1.0 }
         // drop blocks persisted inside the query plan — cached
         // intermediates must not accumulate across the 100+-query
         // session. clearCache() only empties the SQL CacheManager;
@@ -85,9 +115,6 @@ object Bench {
     // 90 s for it to drain, then proceed but stamp the verdict into the
     // JSON so a noisy number is never mistaken for a clean one.
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    // malformed override must not crash the bench before any pass runs
-    val loadGateMax =
-      sys.env.get("SPARK_GRAFT_LOAD_GATE").flatMap(_.toDoubleOption).getOrElse(2.0)
     val startLoad = osBean.getSystemLoadAverage
     var gateWaitSec = 0
     while (osBean.getSystemLoadAverage > loadGateMax && gateWaitSec < 90) {
@@ -232,13 +259,9 @@ object Bench {
         val out = new String(p.getInputStream.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim
         if (p.waitFor() == 0 && out.matches("[0-9a-f]{40}")) out else "unknown"
       } catch { case _: Throwable => "unknown" }
+    val errorsJson = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }.mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","protocol":"${passes.size}pass-cold-min-v3-noop","git_sha":"$gitSha",$machine,$loadGate,$noiseGate,$hostNoise,"noisy_queries":$noisyJson,"query_passes":$passesJson,"queries":$qs,"sf":"$sfDir"}"""
-    println(line)
-    // Self-capture: the driver tails stdout and has truncated the head
-    // two rounds running; the file copy preserves every entry.
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), line + "\n")
-    catch { case _: Throwable => () }
-    spark.stop()
+      s"""{"metric":"total","value":$total,"unit":"sec","protocol":"${passes.size}pass-cold-min-v3-noop","git_sha":"$gitSha",$machine,$loadGate,$noiseGate,$hostNoise,"noisy_queries":$noisyJson,"query_passes":$passesJson,"queries":$qs,"errors":$errorsJson,"sf":"$sfDir"}"""
+    (line, errors.toMap)
   }
 }

@@ -3028,13 +3028,13 @@ object SparkEntry {
         |  CAST(sum(15 + length(CAST(event_id AS VARCHAR)) + length(CAST(event_id % 107 AS VARCHAR))) AS BIGINT) AS entry_chars
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
     // Arrow IPC cycle: each (event_type, shard) bucket's events become
-    // a REAL multi-batch Arrow file written by Arrow Java (the
-    // reference producer on the Spark classpath), decoded end to end
-    // by OUR reader (footer walk, flatbuffers parse, validity/offset
-    // buffer decode; requires verify id/tag/val/flag per row), plus a
-    // require-only ZSTD-compressed lane (our writer -> our reader).
-    // Closed forms: tag = "t"+(id%101), val = id%7. Live two-direction
-    // conformance incl. lz4/zstd bodies + dictionaries: ArrowIpcSpec.
+    // a REAL multi-batch Arrow file built with arrow-java's vectors,
+    // read back through the in-tree Spark face (footer-indexed ranged
+    // batch loads by arrow-java, cell readers; requires verify
+    // id/tag/val/flag per row), plus require-only ZSTD id, map and REE
+    // lanes (our row writer -> our reader). Closed forms: tag =
+    // "t"+(id%101), val = id%7. Face, pruning and hostile-input
+    // contract incl. lz4/zstd bodies + dictionaries: ArrowIpcSpec.
     "q_arrow" ->
       """SELECT event_type,
         |  count(*) AS n_rows,

@@ -1,8 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A failing lane
+  * does not stop the dump; the run exits 1 naming every failed lane. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -14,19 +15,32 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val failed = run(spark, sfDir, outDir, SparkEntry.queries.toSeq)
+    spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** Write every lane's result and oracle_sql.json under `outDir`;
+    * returns (lane, error class) for each lane that failed. */
+  def run(
+      spark: SparkSession,
+      sfDir: String,
+      outDir: String,
+      lanes: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[(String, String)] = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val failed = lanes.flatMap { case (name, fn) =>
+      try { fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"); None }
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        val cls = Bench.errorClass(e)
+        System.err.println(s"[verify] $name failed: $cls: ${e.getMessage}")
+        Some(name -> cls)
       }
       // drop blocks persisted inside the query plan — cached
       // intermediates must not accumulate across the 100+-query session
       finally {
         graft.operators.Staged.releaseAll()
         spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -44,6 +58,9 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    if (failed.nonEmpty)
+      System.err.println(s"[verify] ${failed.size} lane(s) failed: " +
+        failed.map { case (n, c) => s"$n ($c)" }.mkString(", "))
+    failed
   }
 }

@@ -73,95 +73,32 @@ object Windows {
     piv.select($"bucket" +: types.map(t => coalesce(col(t), lit(0L)).as(t)): _*)
   }
 
-  /** Distributed exact cumulative counts for discrete-quantile
-    * selection — the two-phase prefix sum (the `packSequences` scan
-    * decomposition) applied to the distinct-value-counting quantile
-    * shape. Input: `counted(keyCol, valCol, c)` — one row per distinct
-    * (key, value) with its occurrence count. Output: the same rows
-    * plus `cum` (running count over values ≤ this one within the key)
-    * and `cnt` (total count for the key) — bit-identical to a single
-    * `sum(c) over (partition by key order by val)` window, because the
-    * block id `floor(val / blockWidth)` is monotonic in `val`, so
-    * Σ_{earlier blocks} + Σ_{within block so far} is exactly the same
-    * integer sum in the same order.
-    *
-    * Why not the single window: its parallelism equals the KEY
-    * cardinality (3 returnflags = 3 tasks forever — the group-bounded
-    * serialization the r18 verdict flagged), and the post-agg exchange
-    * is byte-small so AQE coalescing folds it further. Here phase 1 is
-    * a tiny per-(key, block) partial agg + a window over one row per
-    * block; phase 2 runs the within-block running sums under an
-    * EXPLICIT width-`spark.sql.shuffle.partitions` repartition on
-    * (key, block) — user-specified partitioning, which AQE does not
-    * coalesce, and which satisfies the window's required distribution
-    * so no second exchange appears. Parallelism = keys × blocks
-    * (domain/blockWidth), independent of the key cardinality; rows per
-    * window partition are bounded by the value DOMAIN within one
-    * block. The block-offset/total frames are domain-bounded (keys ×
-    * blocks rows) and broadcast. */
-  private[graft] def blockedCumCounts(
-      counted: DataFrame,
-      keyCol: String,
-      valCol: String,
-      blockWidth: Long
-  ): DataFrame = {
-    val width = counted.sparkSession.sessionState.conf.numShufflePartitions
-    val blocked = counted.withColumn("__blk", floor(col(valCol) / blockWidth).cast("long"))
-    // one tiny frame carries BOTH the running block offset and the
-    // per-key total (two windows over the same one-row-per-block agg,
-    // one sort) — a separate total subtree would re-run the counted
-    // agg a third time
-    val offs = blocked
-      .groupBy(col(keyCol), col("__blk"))
-      .agg(sum(col("c")).as("__blk_n"))
-      .withColumn(
-        "__blk_off",
-        coalesce(
-          sum(col("__blk_n")).over(
-            Window
-              .partitionBy(col(keyCol))
-              .orderBy(col("__blk"))
-              .rowsBetween(Window.unboundedPreceding, -1)
-          ),
-          lit(0L)
-        )
-      )
-      .withColumn("cnt", sum(col("__blk_n")).over(Window.partitionBy(col(keyCol))))
-    val w = Window
-      .partitionBy(col(keyCol), col("__blk"))
-      .orderBy(col(valCol).asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    blocked
-      .repartition(width, col(keyCol), col("__blk"))
-      .join(
-        broadcast(offs.select(col(keyCol), col("__blk"), col("__blk_off"), col("cnt"))),
-        Seq(keyCol, "__blk")
-      )
-      .withColumn("cum", col("__blk_off") + sum(col("c")).over(w))
-      .drop("__blk", "__blk_off")
-  }
-
   /** ◆ Discrete percentiles (p25/p50/p75) — the exact sorted-element
     * quantile (DuckDB `quantile_disc` picks element ceil(q·n), 1-based)
     * via DISTINCT-VALUE COUNTING (the `Raster.areaStats` shape): the
     * raw scan reduces on the partial-agg path to one row per
     * (flag, price) — bounded by the price DOMAIN, not the row count, at
     * any scale — and only those aggregated rows enter the cumulative
-    * machinery. The element at 1-based position k = ceil(q·n) is the
-    * first price whose cumulative count reaches k. A raw-row window
+    * window. The element at 1-based position k = ceil(q·n) is the first
+    * price whose cumulative count reaches k. A raw-row window
     * partitioned by the 3-value flag would funnel the whole fact table
-    * through 3 sort tasks; this never sorts raw rows at all, and the
-    * cumulative counts come from [[blockedCumCounts]] (keys × blocks
-    * parallel, never key-bounded). */
+    * through 3 sort tasks; this never sorts raw rows at all. */
   def percentilesQuery(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val counted = Tables
       .lineitem(s, dir)
       .groupBy($"l_returnflag", $"l_extendedprice")
       .agg(count(lit(1)).as("c"))
+    val wCum = Window
+      .partitionBy($"l_returnflag")
+      .orderBy($"l_extendedprice".asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wAll = Window.partitionBy($"l_returnflag")
     def pick(q: Double) =
       round(min(when($"cum" >= greatest(lit(1L), ceil(lit(q) * $"cnt")), $"l_extendedprice")), 2)
-    blockedCumCounts(counted, "l_returnflag", "l_extendedprice", blockWidth = 2048L)
+    counted
+      .withColumn("cum", sum($"c").over(wCum))
+      .withColumn("cnt", sum($"c").over(wAll))
       .groupBy($"l_returnflag")
       .agg(pick(0.25).as("p25"), pick(0.5).as("p50"), pick(0.75).as("p75"), sum($"c").as("n"))
   }

@@ -1,1180 +1,593 @@
 package graft.sources
 
+import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.channels.{SeekableByteChannel, WritableByteChannel}
+import java.nio.charset.StandardCharsets.UTF_8
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+import scala.util.control.NonFatal
+
+import org.apache.arrow.compression.CommonsCompressionFactory
+import org.apache.arrow.flatbuf.{DictionaryBatch, Footer, Message, MessageHeader}
+import org.apache.arrow.memory.{ArrowBuf, BufferAllocator, RootAllocator}
+import org.apache.arrow.vector._
+import org.apache.arrow.vector.complex._
+import org.apache.arrow.vector.compression.{CompressionUtil, NoCompressionCodec}
+import org.apache.arrow.vector.dictionary.Dictionary
+import org.apache.arrow.vector.ipc.{ArrowFileWriter, ArrowStreamReader, ArrowStreamWriter, ArrowWriter, ReadChannel}
+import org.apache.arrow.vector.ipc.message.{ArrowBlock, ArrowFieldNode, ArrowFooter, ArrowRecordBatch, IpcOption, MessageSerializer}
+import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit}
+import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema}
+import org.apache.arrow.vector.util.{ByteArrayReadableSeekableByteChannel, DictionaryUtility}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.types._
 
-/** Arrow IPC split scan + writer — the ML-ecosystem columnar
-  * interchange format (HuggingFace `datasets` memory-maps exactly
-  * this; `.arrow` / Feather-v2 files, `.arrows` streams), read the
-  * way the format's design intends: the FILE format ends with a
-  * flatbuffers Footer naming every record-batch extent (offset,
-  * metadata length, body length) — the footer IS the index.
+/** Arrow IPC — the ML-ecosystem columnar interchange format
+  * (HuggingFace `datasets` memory-maps exactly this; `.arrow` /
+  * Feather-v2 files, `.arrows` streams).
   *
-  * Scale shape: the DRIVER reads only the 10-byte tail + the footer
-  * flatbuffer (metadata-scale — batch metadata never lands on the
-  * driver as rows); fetch tasks then ranged-read exactly their
-  * batches' extents and decode columnar buffers directly. A 100 GB
-  * shard file costs the driver two small ranged reads. Body-buffer
-  * compression (LZ4_FRAME / ZSTD, per the IPC spec's BodyCompression)
-  * decodes through the in-tree [[Lz4]] / [[Zstd]] codecs.
-  *
-  * Flatbuffers are parsed/built by hand (vtable walk both ways) — no
-  * generated code; layouts follow the published Schema.fbs /
-  * Message.fbs / File.fbs (arrow-format). Supported column types:
-  * all signed/unsigned ints (u64 reads as decimal(20,0), the lossless
-  * carrier),
-  * half/single/double floats, bool, utf8/binary (+ Large variants),
-  * fixed-size binary, decimal128, date32/64, time32/64, timestamp
-  * (all units), duration, list / large-list / fixed-size-list,
-  * struct, map (Spark MapType), dense + sparse unions (faced as a
-  * `{type_id, variant...}` struct — Spark has no union type),
-  * utf8/binary VIEWS (16-byte view structs over variadic data
-  * buffers, the variadicBufferCounts message field both directions),
-  * RUN-END-ENCODED (decode expands runs to the values type; the
-  * writer run-length compresses adjacent equal values — producer/
-  * validator is Arrow Java's RunEndEncodedVector, the in-container
-  * pyarrow 16.1 binding being broken), LIST-VIEW / LARGE-LIST-VIEW
-  * (offsets + sizes buffers; reads handle overlapping/reordered
-  * views, the writer emits the canonical dense form), and non-delta
-  * dictionary encoding. Interval remains the one refused type (no
-  * Spark-facing carrier).
-  *
-  * Conformance: ArrowIpcSpec pins BOTH directions LIVE against Arrow
-  * Java (ships on the Spark classpath) — our reader over
-  * ArrowFileWriter/ArrowStreamWriter output, Arrow Java's readers
-  * over our writer's output (uncompressed + both codecs via
-  * arrow-compression) — plus committed pyarrow 16.1 fixtures (the
-  * cross-ecosystem producer, incl. compressed + dictionary lanes).
-  *
-  * Untrusted-bytes contract: malformed input of ANY shape raises
-  * [[ArrowError]], never raw index/negative-size errors; declared
-  * counts are bounded against the bytes that back them before any
-  * allocation. */
+  * arrow-java (arrow-vector + arrow-compression, shipped on the Spark
+  * classpath) owns the format: footer and message flatbuffers, buffer
+  * layouts, dictionaries, and LZ4_FRAME / ZSTD bodies. This object
+  * owns what the jar does not do:
+  *  - the Spark face: [[sparkType]] / [[sparkSchema]] and the per-vector
+  *    cell readers — u64 reads as decimal(20,0) (the lossless carrier),
+  *    unions as a `{type_id, variant...}` struct (Spark has no union
+  *    type), run-end-encoded columns as their values type, utf8/binary
+  *    views as string/binary — and the Spark-row -> vector [[Writer]];
+  *  - ranged, pruned reads: an [[IpcFile]] opens on the footer alone
+  *    (the footer IS the batch index), and [[IpcFile.rows]] hands
+  *    arrow-java a sub-batch of only the wanted fields' nodes and
+  *    buffers, so a pruned column is never decompressed, and loads
+  *    only the dictionaries a wanted field references;
+  *  - the untrusted-bytes contract: any failure on hostile bytes —
+  *    arrow-java, Netty, flatbuffers or the JVM — surfaces as
+  *    [[ArrowError]], and every read runs in its own allocator whose
+  *    limit is computed from the input length ([[allocator]]), so a
+  *    declared size the bytes cannot back is refused, not allocated. */
 object ArrowIpc {
 
-  final class ArrowError(msg: String) extends RuntimeException(msg)
+  final class ArrowError(msg: String, cause: Throwable = null) extends RuntimeException(msg, cause)
   private def fail(msg: String): Nothing = throw new ArrowError(msg)
   @inline private def req(c: Boolean, msg: => String): Unit = if (!c) fail(msg)
 
-  /** Wrap raw JVM errors from hostile offsets into the named error. */
+  /** Wrap whatever hostile bytes make arrow-java, Netty or the JVM
+    * throw into the named error. */
   private def guarded[T](what: String)(f: => T): T =
     try f
     catch {
       case e: ArrowError => throw e
-      case e @ (_: IndexOutOfBoundsException | _: NegativeArraySizeException |
-          _: ArithmeticException | _: IllegalArgumentException) =>
-        fail(s"arrow: malformed $what (${e.getClass.getSimpleName}: ${e.getMessage})")
+      case e @ (NonFatal(_) | _: OutOfMemoryError | _: StackOverflowError) =>
+        throw new ArrowError(s"arrow: malformed $what (${e.getClass.getSimpleName}: ${e.getMessage})", e)
     }
 
-  // ---------------------------------------------------------------- LE reads
+  /** The allocation-bomb guard: a read of `inputBytes` may hold at most
+    * 16 MiB plus 256 bytes per input byte of Arrow memory. Uncompressed
+    * data needs about its own size and LZ4 frames cannot expand past
+    * ~255:1, so legitimate input fits; a declared row count or
+    * decompressed length the bytes cannot back (or a ZSTD body beyond
+    * that ratio) hits the limit and is refused before it is allocated. */
+  private def allocator(inputBytes: Long): BufferAllocator =
+    new RootAllocator((16L << 20) + 256L * inputBytes)
 
-  @inline private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  @inline private def u16(b: Array[Byte], i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  @inline private def i16(b: Array[Byte], i: Int): Int = u16(b, i).toShort.toInt
-  @inline private def i32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-  @inline private def i64(b: Array[Byte], i: Int): Long =
-    (i32(b, i) & 0xffffffffL) | (i32(b, i + 4).toLong << 32)
-
-  // ------------------------------------------------- flatbuffers table walk
-
-  /** Absolute position of field `id`'s data in the table at `tab`, or
-    * -1 when the slot is absent (reader must apply the default). */
-  private def fbField(b: Array[Byte], tab: Int, id: Int): Int = {
-    req(tab >= 0 && tab + 4 <= b.length, "flatbuffer table offset out of range")
-    val vt = tab - i32(b, tab)
-    req(vt >= 0 && vt + 4 <= b.length, "flatbuffer vtable out of range")
-    val vtSize = u16(b, vt)
-    val slot = 4 + 2 * id
-    if (slot + 2 > vtSize) -1
-    else {
-      val off = u16(b, vt + slot)
-      if (off == 0) -1
-      else {
-        val p = tab + off
-        req(p >= 0 && p < b.length, "flatbuffer field out of range")
-        p
-      }
-    }
-  }
-
-  private def fbIndirect(b: Array[Byte], pos: Int): Int = {
-    val t = pos + i32(b, pos)
-    req(t >= 0 && t < b.length, "flatbuffer indirection out of range")
-    t
-  }
-
-  private def fbString(b: Array[Byte], pos: Int): String = {
-    val s = fbIndirect(b, pos)
-    val n = i32(b, s)
-    req(n >= 0 && s + 4 + n <= b.length, "flatbuffer string out of range")
-    new String(b, s + 4, n, java.nio.charset.StandardCharsets.UTF_8)
-  }
-
-  /** (elementCount, firstElementPos) for a vector field; elements are
-    * `elemSize` bytes (4 for uoffset elements). */
-  private def fbVector(b: Array[Byte], pos: Int, elemSize: Int): (Int, Int) = {
-    val v = fbIndirect(b, pos)
-    val n = i32(b, v)
-    req(n >= 0 && v + 4 + n.toLong * elemSize <= b.length, "flatbuffer vector out of range")
-    (n, v + 4)
-  }
-
-  @inline private def fbByte(b: Array[Byte], tab: Int, id: Int, dflt: Int): Int = {
-    val p = fbField(b, tab, id); if (p < 0) dflt else u8(b, p)
-  }
-  @inline private def fbShort(b: Array[Byte], tab: Int, id: Int, dflt: Int): Int = {
-    val p = fbField(b, tab, id); if (p < 0) dflt else i16(b, p)
-  }
-  @inline private def fbInt(b: Array[Byte], tab: Int, id: Int, dflt: Int): Int = {
-    val p = fbField(b, tab, id); if (p < 0) dflt else i32(b, p)
-  }
-  @inline private def fbLong(b: Array[Byte], tab: Int, id: Int, dflt: Long): Long = {
-    val p = fbField(b, tab, id); if (p < 0) dflt else i64(b, p)
-  }
-  @inline private def fbBool(b: Array[Byte], tab: Int, id: Int, dflt: Boolean): Boolean = {
-    val p = fbField(b, tab, id); if (p < 0) dflt else b(p) != 0
-  }
-
-  // ------------------------------------------------------------- data model
-
-  sealed trait AType
-  case object ANull extends AType
-  final case class AInt(bits: Int, signed: Boolean) extends AType
-  /** precision: 0=half 1=single 2=double (Schema.fbs Precision). */
-  final case class AFloat(precision: Int) extends AType
-  case object AUtf8 extends AType
-  case object ABinary extends AType
-  case object ALargeUtf8 extends AType
-  case object ALargeBinary extends AType
-  case object ABool extends AType
-  final case class ADecimal(precision: Int, scale: Int, bits: Int) extends AType
-  /** unit: 0=DAY (int32 days) 1=MILLISECOND (int64 ms). */
-  final case class ADate(unit: Int) extends AType
-  /** unit per TimeUnit; bits 32 or 64. */
-  final case class ATime(unit: Int, bits: Int) extends AType
-  /** unit: 0=s 1=ms 2=us 3=ns; tz empty = naive. */
-  final case class ATimestamp(unit: Int, tz: String) extends AType
-  final case class ADuration(unit: Int) extends AType
-  final case class AFixedSizeBinary(byteWidth: Int) extends AType
-  case object AList extends AType
-  case object ALargeList extends AType
-  final case class AFixedSizeList(listSize: Int) extends AType
-  case object AStruct extends AType
-  /** Physically list-of-struct: one non-nullable `entries` child
-    * carrying non-nullable `key` + `value` children (Schema.fbs Map). */
-  final case class AMap(keysSorted: Boolean) extends AType
-  /** `typeIds(j)` is the int8 tag in the types buffer selecting child
-    * j; dense adds a per-slot int32 offsets buffer into that child. */
-  final case class AUnion(dense: Boolean, typeIds: Seq[Int]) extends AType
-  /** Utf8View / BinaryView: 16-byte view structs (len + inline-or-
-    * (prefix, bufIdx, off)) over a VARIABLE number of data buffers —
-    * the count travels in the RecordBatch's variadicBufferCounts. */
-  final case class AView(utf8: Boolean) extends AType
-  /** RunEndEncoded: the parent owns NO buffers and a 0 null count;
-    * child 0 is `run_ends` (int16/32/64, non-nullable, strictly
-    * increasing cumulative end positions), child 1 is `values` (any
-    * type — nulls live here as null runs). Decode expands runs. */
-  case object ARee extends AType
-  /** ListView / LargeListView: validity + OFFSETS + SIZES buffers
-    * over one child — unlike List, views may overlap, nest out of
-    * order, or leave child gaps; each is independently bounded
-    * against the child length. Decode materializes each view. */
-  final case class AListView(wide: Boolean) extends AType
-
-  /** dictId = -1 when not dictionary-encoded; for encoded fields,
-    * `tpe`/`children` describe the VALUE type and the record-batch
-    * column carries indices of `dictIndexBits`. */
-  final case class AField(
-      name: String,
-      nullable: Boolean,
-      tpe: AType,
-      children: Seq[AField] = Nil,
-      dictId: Long = -1L,
-      dictIndexBits: Int = 32,
-      dictIndexSigned: Boolean = true)
-
-  final case class ASchema(fields: Seq[AField])
-  final case class Block(offset: Long, metaLen: Int, bodyLen: Long)
-  final case class Footer(schema: ASchema, dictionaries: Seq[Block], batches: Seq[Block])
-  /** One decoded record batch: columns hold the raw JVM values
-    * (Byte/Short/Int/Long/Float/Double/Boolean/String/Array[Byte]/
-    * BigDecimal/Seq[Any]; null for null slots). */
-  final case class Batch(rows: Int, columns: Array[Array[Any]])
-
-  // union Type member tags (Schema.fbs order; 0 = NONE)
-  private val TNull = 1; private val TInt = 2; private val TFloat = 3
-  private val TBinary = 4; private val TUtf8 = 5; private val TBool = 6
-  private val TDecimal = 7; private val TDate = 8; private val TTime = 9
-  private val TTimestamp = 10; private val TInterval = 11; private val TList = 12
-  private val TStruct = 13; private val TUnion = 14; private val TFixedSizeBinary = 15
-  private val TFixedSizeList = 16; private val TMap = 17; private val TDuration = 18
-  private val TLargeBinary = 19; private val TLargeUtf8 = 20; private val TLargeList = 21
-  private val TRunEndEncoded = 22
-  private val TBinaryView = 23; private val TUtf8View = 24
-  private val TListView = 25; private val TLargeListView = 26
-
-  // MessageHeader union tags
-  private val HSchema = 1; private val HDictionaryBatch = 2; private val HRecordBatch = 3
-
-  private val Magic = "ARROW1".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-
-  // ------------------------------------------------------------ schema parse
-
-  private def parseField(b: Array[Byte], tab: Int, depth: Int): AField = {
-    req(depth < 64, "arrow: field nesting deeper than 64")
-    val namePos = fbField(b, tab, 0)
-    val name = if (namePos < 0) "" else fbString(b, namePos)
-    val nullable = fbBool(b, tab, 1, dflt = false)
-    val typeTag = fbByte(b, tab, 2, 0)
-    val typePos = fbField(b, tab, 3)
-    val typeTab = if (typePos < 0) -1 else fbIndirect(b, typePos)
-    val children: Seq[AField] = {
-      val cPos = fbField(b, tab, 5)
-      if (cPos < 0) Nil
-      else {
-        val (n, base) = fbVector(b, cPos, 4)
-        req(n <= 4096, s"arrow: field '$name' declares $n children")
-        (0 until n).map(i => parseField(b, fbIndirect(b, base + 4 * i), depth + 1))
-      }
-    }
-    val tpe: AType = typeTag match {
-      case TNull => ANull
-      case TInt =>
-        req(typeTab >= 0, "arrow: Int type table missing")
-        AInt(fbInt(b, typeTab, 0, 0), fbBool(b, typeTab, 1, dflt = false))
-      case TFloat =>
-        req(typeTab >= 0, "arrow: FloatingPoint type table missing")
-        AFloat(fbShort(b, typeTab, 0, 0))
-      case TBinary => ABinary
-      case TUtf8 => AUtf8
-      case TBool => ABool
-      case TDecimal =>
-        req(typeTab >= 0, "arrow: Decimal type table missing")
-        ADecimal(fbInt(b, typeTab, 0, 0), fbInt(b, typeTab, 1, 0), fbInt(b, typeTab, 2, 128))
-      case TDate => ADate(if (typeTab < 0) 1 else fbShort(b, typeTab, 0, 1))
-      case TTime =>
-        ATime(if (typeTab < 0) 1 else fbShort(b, typeTab, 0, 1),
-          if (typeTab < 0) 32 else fbInt(b, typeTab, 1, 32))
-      case TTimestamp =>
-        req(typeTab >= 0, "arrow: Timestamp type table missing")
-        val tzPos = fbField(b, typeTab, 1)
-        ATimestamp(fbShort(b, typeTab, 0, 0), if (tzPos < 0) "" else fbString(b, tzPos))
-      case TDuration => ADuration(if (typeTab < 0) 1 else fbShort(b, typeTab, 0, 1))
-      case TFixedSizeBinary =>
-        req(typeTab >= 0, "arrow: FixedSizeBinary type table missing")
-        AFixedSizeBinary(fbInt(b, typeTab, 0, 0))
-      case TList => AList
-      case TLargeList => ALargeList
-      case TFixedSizeList =>
-        req(typeTab >= 0, "arrow: FixedSizeList type table missing")
-        AFixedSizeList(fbInt(b, typeTab, 0, 0))
-      case TStruct => AStruct
-      case TLargeBinary => ALargeBinary
-      case TLargeUtf8 => ALargeUtf8
-      case TUnion =>
-        req(children.nonEmpty, s"arrow: union '$name' with no children")
-        val mode = if (typeTab < 0) 0 else fbShort(b, typeTab, 0, 0)
-        req(mode == 0 || mode == 1, s"arrow: union '$name' mode $mode")
-        val tids: Seq[Int] = {
-          val p = if (typeTab < 0) -1 else fbField(b, typeTab, 1)
-          if (p < 0) children.indices // spec default: 0..n-1
-          else {
-            val (k, base) = fbVector(b, p, 4)
-            (0 until k).map(i => i32(b, base + 4 * i))
-          }
-        }
-        req(tids.length == children.length,
-          s"arrow: union '$name' declares ${tids.length} type ids for ${children.length} children")
-        req(tids.forall(t => t >= 0 && t <= 127), s"arrow: union '$name' type ids $tids outside int8")
-        req(tids.distinct.length == tids.length, s"arrow: union '$name' has duplicate type ids")
-        AUnion(mode == 1, tids)
-      case TMap =>
-        req(children.length == 1 && children.head.children.length == 2,
-          s"arrow: map '$name' must carry one entries child with key + value")
-        req(!children.head.nullable && !children.head.children.head.nullable,
-          s"arrow: map '$name' entries and key must be non-nullable")
-        AMap(if (typeTab < 0) false else fbBool(b, typeTab, 0, dflt = false))
-      case TInterval => fail(s"arrow: interval field '$name' is not supported")
-      case TRunEndEncoded =>
-        req(children.length == 2,
-          s"arrow: run-end-encoded '$name' needs run_ends + values children, got ${children.length}")
-        val re = children.head
-        re.tpe match {
-          case AInt(b, true) if b == 16 || b == 32 || b == 64 => ()
-          case t => fail(s"arrow: run-end-encoded '$name' run_ends must be int16/32/64, got $t")
-        }
-        req(!re.nullable && re.dictId < 0,
-          s"arrow: run-end-encoded '$name' run_ends child must be plain and non-nullable")
-        ARee
-      case TBinaryView => AView(utf8 = false)
-      case TUtf8View => AView(utf8 = true)
-      case TListView | TLargeListView =>
-        req(children.length == 1, s"arrow: list-view '$name' needs exactly one child")
-        AListView(wide = typeTag == TLargeListView)
-      case t => fail(s"arrow: unsupported type tag $t for field '$name'")
-    }
-    // DictionaryEncoding: id(long)=0, indexType(Int)=1, isOrdered=2
-    val dPos = fbField(b, tab, 4)
-    if (dPos < 0) AField(name, nullable, tpe, children)
-    else {
-      val dTab = fbIndirect(b, dPos)
-      val dictId = fbLong(b, dTab, 0, 0L)
-      val iPos = fbField(b, dTab, 1)
-      val (bits, signed) =
-        if (iPos < 0) (32, true)
-        else {
-          val iTab = fbIndirect(b, iPos)
-          (fbInt(b, iTab, 0, 0), fbBool(b, iTab, 1, dflt = false))
-        }
-      req(bits == 8 || bits == 16 || bits == 32 || bits == 64,
-        s"arrow: dictionary index width $bits for field '$name'")
-      AField(name, nullable, tpe, children, dictId, bits, signed)
-    }
-  }
-
-  private def parseSchemaTable(b: Array[Byte], tab: Int): ASchema = {
-    val fPos = fbField(b, tab, 1)
-    if (fPos < 0) ASchema(Nil)
-    else {
-      val (n, base) = fbVector(b, fPos, 4)
-      req(n <= 65536, s"arrow: schema declares $n fields")
-      ASchema((0 until n).map(i => parseField(b, fbIndirect(b, base + 4 * i), 0)))
-    }
-  }
-
-  // ------------------------------------------------------------ footer parse
-
-  /** Parse the file footer from ranged reads — the only bytes the
-    * DRIVER ever touches. `ranged` reads [off, off+n) of a `len`-byte
-    * file. */
-  def footer(ranged: (Long, Int) => Array[Byte], len: Long): Footer = guarded("footer") {
-    req(len >= 8 + 10 + 6, s"arrow: file too short ($len bytes)")
-    val head = ranged(0L, 8)
-    req(head.length == 8 && head.take(6).sameElements(Magic) && head(6) == 0 && head(7) == 0,
-      "arrow: bad file magic")
-    val tail = ranged(len - 10, 10)
-    req(tail.length == 10 && tail.slice(4, 10).sameElements(Magic), "arrow: bad trailing magic")
-    val fLen = i32(tail, 0)
-    req(fLen > 0 && fLen <= len - 8 - 10, s"arrow: footer length $fLen out of range")
-    val fb = ranged(len - 10 - fLen, fLen)
-    req(fb.length == fLen, "arrow: short footer read")
-    val f = parseFooterBytes(fb)
-    // bound every block extent against the real file NOW, so ranged
-    // fetch paths (scan, DSv2 readers) can trust them — a hostile
-    // footer must fail here as ArrowError, never as a raw IO/array
-    // error inside a fetch task
-    (f.dictionaries ++ f.batches).foreach { blk =>
-      // overflow-safe: subtract the (already-bounded) lengths from the
-      // file size instead of summing hostile u64s
-      req(blk.offset >= 8 && blk.metaLen >= 0 && blk.bodyLen >= 0 &&
-        blk.metaLen.toLong + blk.bodyLen <= Int.MaxValue &&
-        blk.offset <= len - 10 - fLen - blk.metaLen - blk.bodyLen,
-        s"arrow: block extent (${blk.offset},${blk.metaLen},${blk.bodyLen}) outside file of $len")
-    }
-    f
-  }
-
-  private[sources] def parseFooterBytes(fb: Array[Byte]): Footer = guarded("footer") {
-    val root = fbIndirect(fb, 0)
-    val sPos = fbField(fb, root, 1)
-    req(sPos >= 0, "arrow: footer has no schema")
-    val schema = parseSchemaTable(fb, fbIndirect(fb, sPos))
-    def blocks(id: Int): Seq[Block] = {
-      val p = fbField(fb, root, id)
-      if (p < 0) Nil
-      else {
-        val (n, base) = fbVector(fb, p, 24)
-        (0 until n).map { i =>
-          val e = base + 24 * i
-          Block(i64(fb, e), i32(fb, e + 8), i64(fb, e + 16))
-        }
-      }
-    }
-    Footer(schema, blocks(2), blocks(3))
-  }
-
-  // ----------------------------------------------------------- message parse
-
-  /** One IPC message extent: (headerType, headerTab, metaBytes,
-    * bodyStart) — bodyStart is the offset of the body within `b`. */
-  private def parseMessage(b: Array[Byte], off: Int): (Int, Int, Array[Byte], Int) = {
-    req(off + 8 <= b.length, "arrow: truncated message prefix")
-    var p = off
-    var metaLen = i32(b, p)
-    if (metaLen == -1) { metaLen = i32(b, p + 4); p += 8 } // V5 continuation
-    else p += 4 // legacy V4 framing
-    req(metaLen > 0 && p + metaLen <= b.length, s"arrow: metadata length $metaLen out of range")
-    val meta = java.util.Arrays.copyOfRange(b, p, p + metaLen)
-    val root = fbIndirect(meta, 0)
-    val hType = fbByte(meta, root, 1, 0)
-    val hPos = fbField(meta, root, 2)
-    req(hPos >= 0, "arrow: message has no header")
-    (hType, fbIndirect(meta, hPos), meta, p + metaLen)
-  }
-
-  // ------------------------------------------------------------ batch decode
-
-  private final class BufCursor(
-      body: Array[Byte],
-      bodyStart: Int,
-      entries: IndexedSeq[(Long, Long)],
-      codec: Int) { // -1 none, 0 lz4-frame, 1 zstd
-    private var i = 0
-    /** advance past k buffers WITHOUT materializing or decompressing
-      * them — the column-pruning fast path. */
-    def skip(k: Int): Unit = {
-      req(i + k <= entries.length, "arrow: batch consumes more buffers than declared")
-      i += k
-    }
-    def next(): Array[Byte] = {
-      req(i < entries.length, "arrow: batch consumes more buffers than declared")
-      val (off, len) = entries(i); i += 1
-      // bound each term before summing: a hostile 2^62-scale off/len pair
-      // would wrap Long in `bodyStart + off + len` and slip past a summed check
-      req(off >= 0 && off <= body.length.toLong - bodyStart &&
-          len >= 0 && len <= body.length.toLong - bodyStart - off,
-        s"arrow: buffer extent ($off,$len) outside body")
-      val start = bodyStart + off.toInt
-      if (len == 0) Array.emptyByteArray
-      else if (codec < 0) java.util.Arrays.copyOfRange(body, start, start + len.toInt)
-      else {
-        req(len >= 8, "arrow: compressed buffer shorter than its length prefix")
-        val declared = i64(body, start)
-        val payload = java.util.Arrays.copyOfRange(body, start + 8, start + len.toInt)
-        if (declared == -1L) payload // spec: -1 marks an uncompressed buffer
-        else {
-          req(declared >= 0 && declared <= (1L << 31) - 16, s"arrow: declared buffer size $declared")
-          val out = codec match {
-            case 0 =>
-              try Lz4.decode(payload)
-              catch { case e: Lz4.Lz4Error => fail(s"arrow: lz4 buffer: ${e.getMessage}") }
-            case 1 =>
-              try Zstd.decode(payload)
-              catch { case e: Zstd.ZstdError => fail(s"arrow: zstd buffer: ${e.getMessage}") }
-            case c => fail(s"arrow: unsupported compression codec $c")
-          }
-          req(out.length.toLong == declared,
-            s"arrow: buffer decompressed to ${out.length}, declared $declared")
-          out
-        }
-      }
-    }
-  }
-
-  @inline private def bitSet(bm: Array[Byte], i: Int): Boolean =
-    (bm(i >> 3) & (1 << (i & 7))) != 0
-
-  /** null-test helper: an elided (empty) validity buffer is only
-    * legal when null_count is 0 — enforced where buffers are sized
-    * (see decodeColumn), so a present bitmap is always full-size. */
-  @inline private def isValid(bm: Array[Byte], i: Int, nullCount: Long): Boolean =
-    nullCount == 0L || bitSet(bm, i)
-
-
-  /** Decode one field's column (recursing into children), consuming
-    * nodes/buffers in the IPC spec's flattened pre-order. */
-  private def decodeColumn(
-      f: AField,
-      nodes: Iterator[(Long, Long)],
-      bufs: BufCursor,
-      dicts: Map[Long, Array[Any]],
-      varCounts: Iterator[Long]): Array[Any] = {
-    req(nodes.hasNext, s"arrow: missing field node for '${f.name}'")
-    val (lenL, nullCount) = nodes.next()
-    req(lenL >= 0 && lenL <= Int.MaxValue - 8, s"arrow: field '${f.name}' length $lenL")
-    val n = lenL.toInt
-
-    val effType: AType =
-      if (f.dictId >= 0) AInt(f.dictIndexBits, f.dictIndexSigned) else f.tpe
-
-    // Allocation-bomb guard: every Array[Any](n) below must be backed
-    // by real bytes. With nulls present the validity bitmap must be
-    // full-size (n/8 bytes an attacker actually has to supply); with
-    // no nulls the data buffer must be full-size. An all-null column
-    // may elide DATA only — never the bitmap.
-    def checkedValidity(validity: Array[Byte]): Array[Byte] = {
-      req(nullCount >= 0 && nullCount <= lenL, s"arrow: field '${f.name}' null count $nullCount of $lenL")
-      if (nullCount > 0)
-        req(validity.length >= (n + 7) / 8,
-          s"arrow: field '${f.name}' validity ${validity.length} bytes for $n rows with $nullCount nulls")
-      validity
-    }
-
-    def fixedData(width: Int): (Array[Byte], Array[Byte]) = {
-      val validity = checkedValidity(bufs.next())
-      val data = bufs.next()
-      req(data.length >= n.toLong * width || nullCount == lenL,
-        s"arrow: field '${f.name}' data buffer ${data.length} < ${n.toLong * width}")
-      (validity, data)
-    }
-
-    val raw: Array[Any] = effType match {
-      case ANull =>
-        // nothing backs a null column; cap it (real writers batch far smaller)
-        req(n <= (1 << 26), s"arrow: null column of $n rows")
-        new Array[Any](n)
-      case AInt(bits, signed) =>
-        val width = bits / 8
-        val (bm, d) = fixedData(width)
-        val out = new Array[Any](n)
-        var i = 0
-        while (i < n) {
-          if (isValid(bm, i, nullCount)) out(i) = (bits, signed) match {
-            case (8, true) => java.lang.Byte.valueOf(d(i))
-            case (8, false) => java.lang.Short.valueOf((d(i) & 0xff).toShort)
-            case (16, true) => java.lang.Short.valueOf(i16(d, 2 * i).toShort)
-            case (16, false) => java.lang.Integer.valueOf(u16(d, 2 * i))
-            case (32, true) => java.lang.Integer.valueOf(i32(d, 4 * i))
-            case (32, false) => java.lang.Long.valueOf(i32(d, 4 * i) & 0xffffffffL)
-            case (64, true) => java.lang.Long.valueOf(i64(d, 8 * i))
-            case (64, false) =>
-              // lossless carrier: unsigned 64 -> BigDecimal(20,0)
-              val v = i64(d, 8 * i)
-              val big =
-                if (v >= 0) java.math.BigInteger.valueOf(v)
-                else java.math.BigInteger.valueOf(v).add(java.math.BigInteger.ONE.shiftLeft(64))
-              new java.math.BigDecimal(big)
-            case _ => fail(s"arrow: int width $bits")
-          }
-          i += 1
-        }
-        out
-      case AFloat(prec) =>
-        val width = prec match { case 0 => 2; case 1 => 4; case 2 => 8; case p => fail(s"arrow: float precision $p") }
-        val (bm, d) = fixedData(width)
-        val out = new Array[Any](n)
-        var i = 0
-        while (i < n) {
-          if (isValid(bm, i, nullCount)) out(i) = prec match {
-            case 0 => java.lang.Float.valueOf(graft.multimodal.Rad.halfToFloat(u16(d, 2 * i)))
-            case 1 => java.lang.Float.valueOf(java.lang.Float.intBitsToFloat(i32(d, 4 * i)))
-            case 2 => java.lang.Double.valueOf(java.lang.Double.longBitsToDouble(i64(d, 8 * i)))
-          }
-          i += 1
-        }
-        out
-      case ABool =>
-        val validity = checkedValidity(bufs.next()); val d = bufs.next()
-        req(d.length >= (n + 7) / 8 || nullCount == lenL, s"arrow: bool buffer short for '${f.name}'")
-        val out = new Array[Any](n)
-        var i = 0
-        while (i < n) { if (isValid(validity, i, nullCount)) out(i) = java.lang.Boolean.valueOf(bitSet(d, i)); i += 1 }
-        out
-      case AUtf8 | ABinary =>
-        val validity = checkedValidity(bufs.next()); val offs = bufs.next(); val data = bufs.next()
-        req(offs.length >= 4L * (n + 1) || n == 0, s"arrow: offsets buffer short for '${f.name}'")
-        val out = new Array[Any](n)
-        var i = 0
-        while (i < n) {
-          if (isValid(validity, i, nullCount)) {
-            val a = i32(offs, 4 * i); val b2 = i32(offs, 4 * (i + 1))
-            req(a >= 0 && b2 >= a && b2 <= data.length, s"arrow: value extent [$a,$b2) for '${f.name}'")
-            out(i) =
-              if (effType == AUtf8) new String(data, a, b2 - a, java.nio.charset.StandardCharsets.UTF_8)
-              else java.util.Arrays.copyOfRange(data, a, b2)
-          }
-          i += 1
-        }
-        out
-      case ALargeUtf8 | ALargeBinary =>
-        val validity = checkedValidity(bufs.next()); val offs = bufs.next(); val data = bufs.next()
-        req(offs.length >= 8L * (n + 1) || n == 0, s"arrow: large offsets short for '${f.name}'")
-        val out = new Array[Any](n)
-        var i = 0
-        while (i < n) {
-          if (isValid(validity, i, nullCount)) {
-            val a = i64(offs, 8 * i); val b2 = i64(offs, 8 * (i + 1))
-            req(a >= 0 && b2 >= a && b2 <= data.length, s"arrow: large value extent [$a,$b2) for '${f.name}'")
-            out(i) =
-              if (effType == ALargeUtf8)
-                new String(data, a.toInt, (b2 - a).toInt, java.nio.charset.StandardCharsets.UTF_8)
-              else java.util.Arrays.copyOfRange(data, a.toInt, b2.toInt)
-          }
-          i += 1
-        }
-        out
-      case AFixedSizeBinary(w) =>
-        req(w >= 0 && w <= (1 << 20), s"arrow: fixed binary width $w")
-        val (bm, d) = fixedData(w)
-        val out = new Array[Any](n)
-        var i = 0
-        while (i < n) { if (isValid(bm, i, nullCount)) out(i) = java.util.Arrays.copyOfRange(d, i * w, (i + 1) * w); i += 1 }
-        out
-      case ADecimal(p, s, bits) =>
-        req(bits == 128, s"arrow: decimal$bits is not supported (only decimal128)")
-        val (bm, d) = fixedData(16)
-        val out = new Array[Any](n)
-        var i = 0
-        while (i < n) {
-          if (isValid(bm, i, nullCount)) {
-            val be = new Array[Byte](16)
-            var j = 0
-            while (j < 16) { be(j) = d(i * 16 + (15 - j)); j += 1 }
-            out(i) = new java.math.BigDecimal(new java.math.BigInteger(be), s)
-          }
-          i += 1
-        }
-        out
-      case ADate(0) =>
-        val (bm, d) = fixedData(4)
-        val out = new Array[Any](n)
-        var i = 0
-        while (i < n) { if (isValid(bm, i, nullCount)) out(i) = java.lang.Integer.valueOf(i32(d, 4 * i)); i += 1 }
-        out
-      case ADate(_) | ATimestamp(_, _) | ADuration(_) | ATime(_, 64) =>
-        val (bm, d) = fixedData(8)
-        val out = new Array[Any](n)
-        var i = 0
-        while (i < n) { if (isValid(bm, i, nullCount)) out(i) = java.lang.Long.valueOf(i64(d, 8 * i)); i += 1 }
-        out
-      case ATime(_, 32) =>
-        val (bm, d) = fixedData(4)
-        val out = new Array[Any](n)
-        var i = 0
-        while (i < n) { if (isValid(bm, i, nullCount)) out(i) = java.lang.Integer.valueOf(i32(d, 4 * i)); i += 1 }
-        out
-      case ATime(_, w) => fail(s"arrow: time$w")
-      case AList | ALargeList =>
-        val validity = checkedValidity(bufs.next()); val offs = bufs.next()
-        val wide = effType == ALargeList
-        req((if (wide) offs.length >= 8L * (n + 1) else offs.length >= 4L * (n + 1)) || n == 0,
-          s"arrow: list offsets short for '${f.name}'")
-        req(f.children.length == 1, s"arrow: list '${f.name}' needs exactly one child")
-        val child = decodeColumn(f.children.head, nodes, bufs, dicts, varCounts)
-        val out = new Array[Any](n)
-        var i = 0
-        while (i < n) {
-          if (isValid(validity, i, nullCount)) {
-            val a = if (wide) i64(offs, 8 * i) else i32(offs, 4 * i).toLong
-            val b2 = if (wide) i64(offs, 8 * (i + 1)) else i32(offs, 4 * (i + 1)).toLong
-            req(a >= 0 && b2 >= a && b2 <= child.length, s"arrow: list extent [$a,$b2) for '${f.name}'")
-            out(i) = child.slice(a.toInt, b2.toInt).toVector
-          }
-          i += 1
-        }
-        out
-      case AFixedSizeList(k) =>
-        req(k >= 0 && k <= (1 << 20), s"arrow: fixed list size $k")
-        val validity = checkedValidity(bufs.next())
-        req(f.children.length == 1, s"arrow: fixed-size list '${f.name}' needs exactly one child")
-        val child = decodeColumn(f.children.head, nodes, bufs, dicts, varCounts)
-        req(child.length >= n.toLong * k || nullCount == lenL,
-          s"arrow: fixed list child ${child.length} < ${n.toLong * k}")
-        val out = new Array[Any](n)
-        var i = 0
-        while (i < n) { if (isValid(validity, i, nullCount)) out(i) = child.slice(i * k, (i + 1) * k).toVector; i += 1 }
-        out
-      case AStruct =>
-        val validity = checkedValidity(bufs.next())
-        // a field-less struct has no backing bytes — cap like ANull
-        req(f.children.nonEmpty || n <= (1 << 26), s"arrow: empty struct of $n rows")
-        val kids = f.children.map(c => decodeColumn(c, nodes, bufs, dicts, varCounts))
-        // every child node must declare exactly the struct's length — a short
-        // child means a malformed file, not implicit null padding
-        kids.zip(f.children).foreach { case (k, c) =>
-          req(k.length == n, s"arrow: struct '${f.name}' child '${c.name}' length ${k.length} != $n")
-        }
-        val out = new Array[Any](n)
-        var i = 0
-        while (i < n) {
-          if (isValid(validity, i, nullCount)) out(i) = kids.map(k => k(i)).toVector
-          i += 1
-        }
-        out
-      case AMap(_) =>
-        // physically list<entries: struct<key, value>> — list layout,
-        // plus the map contract: entries and keys are never null
-        val validity = checkedValidity(bufs.next()); val offs = bufs.next()
-        req(offs.length >= 4L * (n + 1) || n == 0, s"arrow: map offsets short for '${f.name}'")
-        val entries = decodeColumn(f.children.head, nodes, bufs, dicts, varCounts)
-        val out = new Array[Any](n)
-        var i = 0
-        while (i < n) {
-          if (isValid(validity, i, nullCount)) {
-            val a = i32(offs, 4 * i); val b2 = i32(offs, 4 * (i + 1))
-            req(a >= 0 && b2 >= a && b2 <= entries.length, s"arrow: map extent [$a,$b2) for '${f.name}'")
-            var j = a
-            while (j < b2) {
-              val e = entries(j)
-              req(e != null && e.asInstanceOf[Seq[Any]].head != null,
-                s"arrow: map '${f.name}' has a null entry or key at $j")
-              j += 1
-            }
-            out(i) = entries.slice(a, b2).toVector
-          }
-          i += 1
-        }
-        out
-      case AUnion(dense, typeIds) =>
-        // unions carry no validity buffer — nulls live in the children
-        req(nullCount == 0, s"arrow: union '${f.name}' declares $nullCount top-level nulls")
-        val types = bufs.next()
-        req(types.length >= n || n == 0, s"arrow: union types buffer short for '${f.name}'")
-        val offs = if (!dense) null else {
-          val o = bufs.next()
-          req(o.length >= 4L * n || n == 0, s"arrow: union offsets short for '${f.name}'")
-          o
-        }
-        val kids = f.children.map(c => decodeColumn(c, nodes, bufs, dicts, varCounts))
-        if (!dense) kids.zip(f.children).foreach { case (k, c) =>
-          req(k.length == n, s"arrow: sparse union '${f.name}' child '${c.name}' length ${k.length} != $n")
-        }
-        val tidToChild = typeIds.zipWithIndex.toMap
-        val out = new Array[Any](n)
-        var i = 0
-        while (i < n) {
-          val tid = types(i).toInt
-          val ci = tidToChild.getOrElse(tid, fail(s"arrow: union '${f.name}' slot $i has undeclared type id $tid"))
-          val slot =
-            if (!dense) i
-            else {
-              val o = i32(offs, 4 * i)
-              req(o >= 0 && o < kids(ci).length,
-                s"arrow: union '${f.name}' offset $o outside child of ${kids(ci).length}")
-              o
-            }
-          out(i) = Vector(tid, kids(ci)(slot))
-          i += 1
-        }
-        out
-      case AView(utf8) =>
-        val validity = checkedValidity(bufs.next())
-        val views = bufs.next()
-        req(views.length >= 16L * n || n == 0, s"arrow: views buffer short for '${f.name}'")
-        req(varCounts.hasNext, s"arrow: view field '${f.name}' has no variadic buffer count")
-        val k = varCounts.next()
-        req(k >= 0 && k <= 4096, s"arrow: view field '${f.name}' declares $k data buffers")
-        val data = Array.fill(k.toInt)(bufs.next())
-        val out = new Array[Any](n)
-        var i = 0
-        while (i < n) {
-          if (isValid(validity, i, nullCount)) {
-            val base = 16 * i
-            val len = i32(views, base)
-            req(len >= 0, s"arrow: view length $len for '${f.name}'")
-            val bytes =
-              if (len <= 12) java.util.Arrays.copyOfRange(views, base + 4, base + 4 + len)
-              else {
-                val bufIdx = i32(views, base + 8)
-                val off = i32(views, base + 12)
-                req(bufIdx >= 0 && bufIdx < data.length, s"arrow: view buffer index $bufIdx for '${f.name}'")
-                val d = data(bufIdx)
-                req(off >= 0 && len <= d.length - off, s"arrow: view extent ($off,$len) for '${f.name}'")
-                // spec: the 4-byte prefix must mirror the data's first bytes
-                var j = 0
-                while (j < 4) {
-                  req(views(base + 4 + j) == d(off + j), s"arrow: view prefix mismatch at row $i of '${f.name}'")
-                  j += 1
-                }
-                java.util.Arrays.copyOfRange(d, off, off + len)
-              }
-            out(i) =
-              if (utf8) new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-              else bytes
-          }
-          i += 1
-        }
-        out
-      case AListView(wide) =>
-        val validity = checkedValidity(bufs.next())
-        val offs = bufs.next()
-        val sizes = bufs.next()
-        val w = if (wide) 8 else 4
-        req((offs.length >= w.toLong * n && sizes.length >= w.toLong * n) || n == 0 || nullCount == lenL,
-          s"arrow: list-view buffers short for '${f.name}'")
-        req(f.children.length == 1, s"arrow: list-view '${f.name}' needs exactly one child")
-        val child = decodeColumn(f.children.head, nodes, bufs, dicts, varCounts)
-        val out = new Array[Any](n)
-        var i = 0
-        while (i < n) {
-          if (isValid(validity, i, nullCount)) {
-            val a = if (wide) i64(offs, 8 * i) else i32(offs, 4 * i).toLong
-            val sz = if (wide) i64(sizes, 8 * i) else i32(sizes, 4 * i).toLong
-            req(a >= 0 && sz >= 0 && a + sz <= child.length,
-              s"arrow: list-view extent ($a,$sz) outside child of ${child.length} for '${f.name}'")
-            out(i) = child.slice(a.toInt, (a + sz).toInt).toVector
-          }
-          i += 1
-        }
-        out
-      case ARee =>
-        // the parent carries no buffers; expand run_ends/values to plain
-        req(nullCount == 0, s"arrow: run-end-encoded '${f.name}' declares $nullCount top-level nulls")
-        val runEnds = decodeColumn(f.children.head, nodes, bufs, dicts, varCounts)
-        val values = decodeColumn(f.children(1), nodes, bufs, dicts, varCounts)
-        req(runEnds.length == values.length,
-          s"arrow: run-end-encoded '${f.name}' has ${runEnds.length} run ends for ${values.length} values")
-        val out = new Array[Any](n)
-        var prev = 0L
-        var i = 0
-        while (i < runEnds.length) {
-          val end = runEnds(i) match {
-            case x: java.lang.Number => x.longValue
-            case x => fail(s"arrow: run end of ${x.getClass.getSimpleName} in '${f.name}'")
-          }
-          req(end > prev && end <= Int.MaxValue,
-            s"arrow: run ends of '${f.name}' must be strictly increasing positive ints (got $end after $prev)")
-          var p = prev
-          val stop = math.min(end, n.toLong)
-          while (p < stop) { out(p.toInt) = values(i); p += 1 }
-          prev = end
-          i += 1
-        }
-        req(prev >= n, s"arrow: run-end-encoded '${f.name}' runs cover only $prev of $n rows")
-        out
-    }
-
-    if (f.dictId < 0) raw
-    else {
-      val dict = dicts.getOrElse(f.dictId, fail(s"arrow: field '${f.name}' references unknown dictionary ${f.dictId}"))
-      val out = new Array[Any](n)
-      var i = 0
-      while (i < n) {
-        raw(i) match {
-          case null => ()
-          case v: java.lang.Number =>
-            val idx = v.longValue
-            req(idx >= 0 && idx < dict.length, s"arrow: dictionary index $idx outside ${dict.length}")
-            out(i) = dict(idx.toInt)
-          case other => fail(s"arrow: dictionary index of ${other.getClass.getSimpleName}")
-        }
-        i += 1
-      }
-      out
-    }
-  }
-
-  /** Column-pruning walk: consume a field's nodes and buffers WITHOUT
-    * decoding (and, crucially, without decompressing) them. */
-  private def skipColumn(f: AField, nodes: Iterator[(Long, Long)], bufs: BufCursor,
-      varCounts: Iterator[Long]): Unit = {
-    req(nodes.hasNext, s"arrow: missing field node for '${f.name}'")
-    nodes.next()
-    val effType: AType =
-      if (f.dictId >= 0) AInt(f.dictIndexBits, f.dictIndexSigned) else f.tpe
-    effType match {
-      case ANull => ()
-      case AInt(_, _) | AFloat(_) | ABool | AFixedSizeBinary(_) | ADecimal(_, _, _) |
-          ADate(_) | ATime(_, _) | ATimestamp(_, _) | ADuration(_) =>
-        bufs.skip(2)
-      case AUtf8 | ABinary | ALargeUtf8 | ALargeBinary => bufs.skip(3)
-      case AList | ALargeList | AMap(_) =>
-        bufs.skip(2)
-        skipColumn(f.children.head, nodes, bufs, varCounts)
-      case AFixedSizeList(_) =>
-        bufs.skip(1)
-        skipColumn(f.children.head, nodes, bufs, varCounts)
-      case AStruct =>
-        bufs.skip(1)
-        f.children.foreach(c => skipColumn(c, nodes, bufs, varCounts))
-      case AUnion(dense, _) =>
-        bufs.skip(if (dense) 2 else 1) // types (+ offsets); no validity
-        f.children.foreach(c => skipColumn(c, nodes, bufs, varCounts))
-      case AView(_) =>
-        req(varCounts.hasNext, s"arrow: view field '${f.name}' has no variadic buffer count")
-        val k = varCounts.next()
-        req(k >= 0 && k <= 4096, s"arrow: view field '${f.name}' declares $k data buffers")
-        bufs.skip(2 + k.toInt) // validity + views + k data buffers
-      case ARee =>
-        // no buffers of its own; consume both children
-        f.children.foreach(c => skipColumn(c, nodes, bufs, varCounts))
-      case AListView(_) =>
-        bufs.skip(3) // validity + offsets + sizes
-        skipColumn(f.children.head, nodes, bufs, varCounts)
-    }
-  }
-
-  /** RecordBatch table -> nodes + buffers + compression codec +
-    * per-view-column variadic buffer counts (field 4, [long]). */
-  private def batchParts(meta: Array[Byte], rbTab: Int): (Long, IndexedSeq[(Long, Long)], IndexedSeq[(Long, Long)], Int, IndexedSeq[Long]) = {
-    val rows = fbLong(meta, rbTab, 0, 0L)
-    def structVec(id: Int): IndexedSeq[(Long, Long)] = {
-      val p = fbField(meta, rbTab, id)
-      if (p < 0) Vector.empty
-      else {
-        val (n, base) = fbVector(meta, p, 16)
-        (0 until n).map(i => (i64(meta, base + 16 * i), i64(meta, base + 16 * i + 8)))
-      }
-    }
-    val nodes = structVec(1)
-    val buffers = structVec(2)
-    val codec = {
-      val cPos = fbField(meta, rbTab, 3)
-      if (cPos < 0) -1
-      else {
-        val cTab = fbIndirect(meta, cPos)
-        val method = fbByte(meta, cTab, 1, 0)
-        req(method == 0, s"arrow: body compression method $method")
-        fbByte(meta, cTab, 0, 0)
-      }
-    }
-    val varCounts: IndexedSeq[Long] = {
-      val p = fbField(meta, rbTab, 4)
-      if (p < 0) Vector.empty
-      else {
-        val (n, base) = fbVector(meta, p, 8)
-        (0 until n).map(i => i64(meta, base + 8 * i))
-      }
-    }
-    (rows, nodes, buffers, codec, varCounts)
-  }
-
-  /** Decode the record-batch message at `off` in `b` (framing
-    * included), using already-decoded dictionaries. */
-  def decodeBatchMessage(
-      b: Array[Byte],
-      off: Int,
-      schema: ASchema,
-      dicts: Map[Long, Array[Any]] = Map.empty): Batch =
-    decodeBatchMessage(b, off, schema, dicts, _ => true)
-
-  /** Pruned decode: columns failing `wanted` consume their node/
-    * buffer slots WITHOUT materializing or decompressing anything
-    * (their slot in the result is null). The DSv2 face pushes column
-    * pruning down to here — on compressed files a pruned column's
-    * codec work is skipped entirely. */
-  def decodeBatchMessage(
-      b: Array[Byte],
-      off: Int,
-      schema: ASchema,
-      dicts: Map[Long, Array[Any]],
-      wanted: Int => Boolean): Batch = guarded("record batch") {
-    val (hType, rbTab, meta, bodyStart) = parseMessage(b, off)
-    req(hType == HRecordBatch, s"arrow: expected record batch, got header type $hType")
-    val (rows, nodes, buffers, codec, varCounts) = batchParts(meta, rbTab)
-    req(rows >= 0 && rows <= Int.MaxValue - 8, s"arrow: batch of $rows rows")
-    val nodeIt = nodes.iterator
-    val varIt = varCounts.iterator
-    val cursor = new BufCursor(b, bodyStart, buffers, codec)
-    val cols = schema.fields.zipWithIndex.map { case (f, i) =>
-      if (!wanted(i)) { skipColumn(f, nodeIt, cursor, varIt); null }
-      else {
-        val col = decodeColumn(f, nodeIt, cursor, dicts, varIt)
-        req(col.length == rows.toInt, s"arrow: column '${f.name}' length ${col.length} != $rows")
-        col
-      }
-    }.toArray
-    Batch(rows.toInt, cols)
-  }
-
-  /** Decode a dictionary-batch message: (dictId, values). Delta
-    * dictionaries refuse (no registered query needs appends). */
-  def decodeDictionaryMessage(b: Array[Byte], off: Int, schema: ASchema): (Long, Array[Any]) =
-    guarded("dictionary batch") {
-      val (hType, dbTab, meta, bodyStart) = parseMessage(b, off)
-      req(hType == HDictionaryBatch, s"arrow: expected dictionary batch, got $hType")
-      val dictId = fbLong(meta, dbTab, 0, 0L)
-      req(!fbBool(meta, dbTab, 2, dflt = false), "arrow: delta dictionaries are not supported")
-      val dPos = fbField(meta, dbTab, 1)
-      req(dPos >= 0, "arrow: dictionary batch has no data")
-      val rbTab = fbIndirect(meta, dPos)
-      val valueField = schema.fields
-        .flatMap(flatten)
-        .find(_.dictId == dictId)
-        .getOrElse(fail(s"arrow: dictionary $dictId matches no schema field"))
-      val (rows, nodes, buffers, codec, varCounts) = batchParts(meta, rbTab)
-      req(rows >= 0 && rows <= (1 << 28), s"arrow: dictionary of $rows values")
-      val bare = valueField.copy(dictId = -1L)
-      val col = decodeColumn(bare, nodes.iterator, new BufCursor(b, bodyStart, buffers, codec), Map.empty, varCounts.iterator)
-      req(col.length == rows.toInt, "arrow: dictionary column length drift")
-      (dictId, col)
-    }
-
-  private[sources] def flatten(f: AField): Seq[AField] = f +: f.children.flatMap(flatten)
-
-  /** Dictionary id of the dictionary-batch message at `off` WITHOUT
-    * touching its body — lets a pruned reader skip unneeded
-    * dictionaries' decode (and codec) work entirely. */
-  def dictionaryIdOf(b: Array[Byte], off: Int): Long = guarded("dictionary batch") {
-    val (hType, dbTab, meta, _) = parseMessage(b, off)
-    req(hType == HDictionaryBatch, s"arrow: expected dictionary batch, got $hType")
-    fbLong(meta, dbTab, 0, 0L)
-  }
-
-  // ------------------------------------------------------------- whole-file
-
-  /** Convenience: decode a whole in-memory FILE-format payload. */
-  def readFileBytes(bytes: Array[Byte]): (ASchema, Seq[Batch]) = guarded("file") {
-    val ranged: (Long, Int) => Array[Byte] =
-      (off, n) => java.util.Arrays.copyOfRange(bytes, off.toInt, off.toInt + n)
-    val f = footer(ranged, bytes.length.toLong)
-    val dicts = f.dictionaries.map { blk =>
-      req(blk.offset >= 0 && blk.offset <= Int.MaxValue, "arrow: dictionary block offset")
-      decodeDictionaryMessage(bytes, blk.offset.toInt, f.schema)
-    }.toMap
-    val batches = f.batches.map { blk =>
-      req(blk.offset >= 0 && blk.offset <= Int.MaxValue, "arrow: batch block offset")
-      decodeBatchMessage(bytes, blk.offset.toInt, f.schema, dicts)
-    }
-    (f.schema, batches)
-  }
-
-  /** Decode a whole STREAM-format payload (`.arrows`): schema message,
-    * then dictionary/record-batch messages until EOS. */
-  def readStreamBytes(bytes: Array[Byte]): (ASchema, Seq[Batch]) = guarded("stream") {
-    val (hType, sTab, sMeta, firstBody) = parseMessage(bytes, 0)
-    req(hType == HSchema, s"arrow: stream must open with a schema message, got $hType")
-    val schema = parseSchemaTable(sMeta, sTab)
-    var off = firstBody // schema messages have no body
-    var dicts = Map.empty[Long, Array[Any]]
-    val batches = Vector.newBuilder[Batch]
-    var done = false
-    while (!done && off < bytes.length) {
-      req(off + 4 <= bytes.length, "arrow: truncated stream")
-      val w = i32(bytes, off)
-      if (w == 0) { done = true } // bare EOS (legacy)
-      else if (w == -1 && off + 8 <= bytes.length && i32(bytes, off + 4) == 0) { done = true }
-      else {
-        val (hType2, tab, meta, bodyStart) = parseMessage(bytes, off)
-        val bodyLen = {
-          val root = fbIndirect(meta, 0)
-          fbLong(meta, root, 3, 0L)
-        }
-        req(bodyLen >= 0 && bodyStart + bodyLen <= bytes.length, s"arrow: body length $bodyLen out of range")
-        hType2 match {
-          case HDictionaryBatch =>
-            val (id, col) = decodeDictionaryMessage(bytes, off, schema)
-            dicts += (id -> col)
-          case HRecordBatch =>
-            batches += decodeBatchMessage(bytes, off, schema, dicts)
-          case t => fail(s"arrow: unexpected mid-stream header type $t")
-        }
-        off = bodyStart + bodyLen.toInt
-      }
-    }
-    (schema, batches.result())
-  }
+  private val Magic = "ARROW1".getBytes(UTF_8)
 
   // ------------------------------------------------------------- Spark face
 
-  def sparkType(f: AField): DataType = f.tpe match {
-    case ANull => NullType
-    case AInt(8, true) => ByteType
-    case AInt(8, false) => ShortType
-    case AInt(16, true) => ShortType
-    case AInt(16, false) => IntegerType
-    case AInt(32, true) => IntegerType
-    case AInt(32, false) => LongType
-    case AInt(64, true) => LongType
-    case AInt(64, false) => DecimalType(20, 0) // lossless u64 carrier
-    case AInt(b, s) => fail(s"arrow: no Spark type for int($b, signed=$s)")
-    case AFloat(0) | AFloat(1) => FloatType
-    case AFloat(_) => DoubleType
-    case AUtf8 | ALargeUtf8 => StringType
-    case ABinary | ALargeBinary | AFixedSizeBinary(_) => BinaryType
-    case ABool => BooleanType
-    case ADecimal(p, s, _) => DecimalType(p, s)
-    case ADate(_) => DateType
-    case ATimestamp(_, _) => TimestampType
-    case ATime(_, 32) => IntegerType
-    case ATime(_, _) => LongType
-    case ADuration(_) => LongType
-    case AList | ALargeList | AFixedSizeList(_) | AListView(_) =>
-      ArrayType(sparkType(f.children.head), containsNull = effNullable(f.children.head))
-    case AStruct => StructType(f.children.map(c => StructField(c.name, sparkType(c), effNullable(c))))
-    case AMap(_) =>
-      val e = f.children.head
-      MapType(sparkType(e.children(0)), sparkType(e.children(1)), valueContainsNull = effNullable(e.children(1)))
-    case AUnion(_, _) =>
-      // Spark has no union type; face it the Avro-union way — a struct
-      // of the selecting tag plus one nullable field per variant
-      StructType(StructField("type_id", ByteType, nullable = false) +:
-        f.children.map(c => StructField(c.name, sparkType(c), nullable = true)))
-    case AView(utf8) => if (utf8) StringType else BinaryType
-    case ARee => sparkType(f.children(1)) // decode expands to the values type
+  def sparkType(f: Field): DataType = {
+    def kids = f.getChildren.asScala.toSeq
+    def kid(c: Field) = StructField(c.getName, sparkType(c), effNullable(c))
+    f.getType match {
+      case _: ArrowType.Null => NullType
+      case t: ArrowType.Int =>
+        (t.getBitWidth, t.getIsSigned) match {
+          case (8, true) => ByteType
+          case (8, false) | (16, true) => ShortType
+          case (16, false) | (32, true) => IntegerType
+          case (32, false) | (64, true) => LongType
+          case (64, false) => DecimalType(20, 0) // lossless u64 carrier
+          case (b, s) => fail(s"arrow: no Spark type for int($b, signed=$s) '${f.getName}'")
+        }
+      case t: ArrowType.FloatingPoint =>
+        if (t.getPrecision == FloatingPointPrecision.DOUBLE) DoubleType else FloatType
+      case _: ArrowType.Utf8 | _: ArrowType.LargeUtf8 | _: ArrowType.Utf8View => StringType
+      case _: ArrowType.Binary | _: ArrowType.LargeBinary | _: ArrowType.BinaryView |
+          _: ArrowType.FixedSizeBinary => BinaryType
+      case _: ArrowType.Bool => BooleanType
+      case t: ArrowType.Decimal if t.getBitWidth == 128 => DecimalType(t.getPrecision, t.getScale)
+      case _: ArrowType.Date => DateType
+      case _: ArrowType.Timestamp => TimestampType
+      case t: ArrowType.Time => if (t.getBitWidth == 32) IntegerType else LongType
+      case _: ArrowType.Duration => LongType
+      case _: ArrowType.List | _: ArrowType.LargeList | _: ArrowType.FixedSizeList |
+          _: ArrowType.ListView | _: ArrowType.LargeListView =>
+        req(kids.length == 1, s"arrow: list '${f.getName}' needs exactly one child")
+        ArrayType(sparkType(kids.head), containsNull = effNullable(kids.head))
+      case _: ArrowType.Struct => StructType(kids.map(kid))
+      case _: ArrowType.Map =>
+        req(kids.length == 1 && kids.head.getChildren.size == 2 && !kids.head.isNullable &&
+          !kids.head.getChildren.get(0).isNullable,
+          s"arrow: map '${f.getName}' must carry one non-null entries child with a non-null key + value")
+        val Seq(k, v) = kids.head.getChildren.asScala.toSeq
+        MapType(sparkType(k), sparkType(v), valueContainsNull = effNullable(v))
+      case t: ArrowType.Union =>
+        val ids = Option(t.getTypeIds).map(_.toSeq).getOrElse(kids.indices)
+        req(kids.nonEmpty && ids.length == kids.length && ids.distinct.length == ids.length &&
+          ids.forall(i => i >= 0 && i <= 127), s"arrow: union '${f.getName}' type ids $ids for ${kids.length} children")
+        // the Avro-union face: the selecting tag plus one nullable field per variant
+        StructType(StructField("type_id", ByteType, nullable = false) +: kids.map(kid(_).copy(nullable = true)))
+      case _: ArrowType.RunEndEncoded =>
+        req(kids.length == 2, s"arrow: run-end-encoded '${f.getName}' needs run_ends + values children")
+        val ends = kids.head
+        req(!ends.isNullable && ends.getDictionary == null && (ends.getType match {
+          case t: ArrowType.Int => t.getIsSigned && Set(16, 32, 64)(t.getBitWidth)
+          case _ => false
+        }), s"arrow: run-end-encoded '${f.getName}' run_ends must be non-null int16/32/64")
+        sparkType(kids(1)) // reads expand runs to the values type
+      case t => fail(s"arrow: unsupported type $t for field '${f.getName}'")
+    }
   }
 
   /** A run-end-encoded field yields nulls whenever its VALUES child
     * does, regardless of the parent's declared nullability. */
-  private def effNullable(f: AField): Boolean = f.tpe match {
-    case ARee => f.nullable || effNullable(f.children(1))
-    case _ => f.nullable
+  private def effNullable(f: Field): Boolean = f.getType match {
+    case _: ArrowType.RunEndEncoded => f.isNullable || effNullable(f.getChildren.get(1))
+    case _ => f.isNullable
   }
 
-  def sparkSchema(s: ASchema): StructType =
-    StructType(s.fields.map(f => StructField(f.name, sparkType(f), effNullable(f))))
+  def sparkSchema(s: Schema): StructType =
+    StructType(s.getFields.asScala.toSeq.map(f => StructField(f.getName, sparkType(f), effNullable(f))))
 
-  /** Raw decoded value -> Spark external-row value. */
-  private[sources] def toRowValue(f: AField, v: Any): Any = v match {
-    case null => null
-    case _ =>
-      f.tpe match {
-        case ADate(0) => java.time.LocalDate.ofEpochDay(v.asInstanceOf[Int].toLong)
-        case ADate(_) => java.time.LocalDate.ofEpochDay(Math.floorDiv(v.asInstanceOf[Long], 86400000L))
-        case ATimestamp(unit, _) =>
-          val t = v.asInstanceOf[Long]
-          unit match {
-            case 0 => java.time.Instant.ofEpochSecond(t)
-            case 1 => java.time.Instant.ofEpochMilli(t)
-            case 2 => java.time.Instant.ofEpochSecond(Math.floorDiv(t, 1000000L), Math.floorMod(t, 1000000L) * 1000L)
-            case _ => java.time.Instant.ofEpochSecond(Math.floorDiv(t, 1000000000L), Math.floorMod(t, 1000000000L))
-          }
-        case AList | ALargeList | AFixedSizeList(_) | AListView(_) =>
-          v.asInstanceOf[Seq[Any]].map(e => toRowValue(f.children.head, e))
-        case AStruct =>
-          Row.fromSeq(f.children.zip(v.asInstanceOf[Seq[Any]]).map { case (c, e) => toRowValue(c, e) })
-        case AMap(_) =>
-          val e = f.children.head
-          val kf = e.children(0); val vf = e.children(1)
-          v.asInstanceOf[Seq[Any]].map { entry =>
-            val p = entry.asInstanceOf[Seq[Any]]
-            toRowValue(kf, p(0)) -> toRowValue(vf, p(1))
-          }.toMap
-        case AUnion(_, typeIds) =>
-          val p = v.asInstanceOf[Seq[Any]]
-          val tid = p(0).asInstanceOf[Int]
-          val ci = typeIds.indexOf(tid)
-          Row.fromSeq(java.lang.Byte.valueOf(tid.toByte) +:
-            f.children.zipWithIndex.map { case (c, j) => if (j == ci) toRowValue(c, p(1)) else null })
-        case ARee => toRowValue(f.children(1), v) // already expanded to values
-        case _ => v
+  /** Cell reader for a loaded vector: row -> Spark external value.
+    * Extents that would size an allocation (value lengths, list and
+    * dictionary indices) are bounded before use; every other read goes
+    * through arrow-java's bounds-checked buffers. */
+  private def cell(f: Field, v: FieldVector, dicts: java.util.Map[java.lang.Long, Dictionary], cap: Long): Int => Any = {
+    def sub(j: Int) = cell(f.getChildren.get(j), v.getChildrenFromFields.get(j), dicts, cap)
+    /** child-0 elements [start, end) of row i, e.g. a list's items */
+    def span(at: Int => (Long, Long)): Int => Any = {
+      val child = v.getChildrenFromFields.get(0)
+      val c = sub(0)
+      i => {
+        val (a, b) = at(i)
+        req(a >= 0 && a <= b && b <= child.getValueCount,
+          s"arrow: list extent [$a,$b) outside child of ${child.getValueCount} in '${f.getName}'")
+        (a.toInt until b.toInt).map(c)
       }
+    }
+    def union(tid: Int => Int, slot: Int => Int): Int => Any = {
+      val kids = v.getChildrenFromFields.asScala.toIndexedSeq
+      val ids = Option(f.getType.asInstanceOf[ArrowType.Union].getTypeIds).map(_.toSeq).getOrElse(kids.indices)
+      val byId = ids.zipWithIndex.toMap
+      val reads = kids.indices.map(sub)
+      i => {
+        val t = tid(i)
+        val c = byId.getOrElse(t, fail(s"arrow: union '${f.getName}' slot $i has undeclared type id $t"))
+        val s = slot(i)
+        req(s >= 0 && s < kids(c).getValueCount, s"arrow: union '${f.getName}' offset $s outside its child")
+        new GenericRow(Array.tabulate[Any](kids.length + 1)(j => if (j == 0) t.toByte else if (j == c + 1) reads(c)(s) else null))
+      }
+    }
+    val read: Int => Any = Option(f.getDictionary) match {
+      case Some(enc) =>
+        val d = Option(dicts.get(enc.getId))
+          .getOrElse(fail(s"arrow: field '${f.getName}' references unknown dictionary ${enc.getId}")).getVector
+        val value = cell(d.getField, d, dicts, cap)
+        val ix = v.asInstanceOf[BaseIntVector]
+        i => {
+          val k = ix.getValueAsLong(i)
+          req(k >= 0 && k < d.getValueCount, s"arrow: dictionary index $k outside ${d.getValueCount}")
+          value(k.toInt)
+        }
+      case None =>
+        v match {
+          case _: NullVector => _ => null
+          case x: UInt8Vector => i => new java.math.BigDecimal(x.getObjectNoOverflow(i))
+          case x: BaseIntVector => // unsigned getters come back masked; narrow to the face's width
+            sparkType(f) match {
+              case ByteType => i => x.getValueAsLong(i).toByte
+              case ShortType => i => x.getValueAsLong(i).toShort
+              case IntegerType => i => x.getValueAsLong(i).toInt
+              case _ => i => x.getValueAsLong(i)
+            }
+          case x: Float8Vector => i => x.get(i)
+          case x: FloatingPointVector => i => x.getValueAsDouble(i).toFloat
+          case x: BitVector => i => x.get(i) != 0
+          case x: VariableWidthFieldVector =>
+            val text = isText(x)
+            i => {
+              val n = x.getValueLength(i)
+              req(n >= 0 && n <= cap, s"arrow: value of $n bytes in '${f.getName}'")
+              val b = x.get(i)
+              if (text) new String(b, UTF_8) else b
+            }
+          case x: FixedSizeBinaryVector => i => x.get(i)
+          case x: DecimalVector => i => x.getObject(i)
+          case x: DateDayVector => i => java.time.LocalDate.ofEpochDay(x.get(i).toLong)
+          case x: DateMilliVector => i => java.time.LocalDate.ofEpochDay(Math.floorDiv(x.get(i), 86400000L))
+          case x: TimeSecVector => i => x.get(i)
+          case x: TimeMilliVector => i => x.get(i)
+          case x: TimeMicroVector => i => x.get(i)
+          case x: TimeNanoVector => i => x.get(i)
+          case x: TimeStampVector =>
+            val perSec = f.getType.asInstanceOf[ArrowType.Timestamp].getUnit match {
+              case TimeUnit.SECOND => 1L
+              case TimeUnit.MILLISECOND => 1000L
+              case TimeUnit.MICROSECOND => 1000000L
+              case TimeUnit.NANOSECOND => 1000000000L
+            }
+            i => {
+              val t = x.get(i)
+              java.time.Instant.ofEpochSecond(Math.floorDiv(t, perSec), Math.floorMod(t, perSec) * (1000000000L / perSec))
+            }
+          case x: DurationVector => i => DurationVector.get(x.getDataBuffer, i)
+          case x: MapVector =>
+            val entries = span(i => (x.getElementStartIndex(i).toLong, x.getElementEndIndex(i).toLong))
+            i => entries(i).asInstanceOf[Seq[Row]].map { e =>
+              req(e != null && !e.isNullAt(0), s"arrow: map '${f.getName}' has a null entry or key")
+              e.get(0) -> e.get(1)
+            }.toMap
+          case x: ListViewVector => // views: (offset, size) pairs, possibly overlapping
+            span(i => { val a = x.getOffsetBuffer.getInt(4L * i).toLong; (a, a + x.getSizeBuffer.getInt(4L * i)) })
+          case x: LargeListViewVector =>
+            span(i => { val a = x.getOffsetBuffer.getLong(8L * i); (a, a + x.getSizeBuffer.getLong(8L * i)) })
+          case x: BaseListVector => // list, fixed-size list
+            span(i => (x.getElementStartIndex(i).toLong, x.getElementEndIndex(i).toLong))
+          case x: LargeListVector => span(i => (x.getElementStartIndex(i), x.getElementEndIndex(i)))
+          case _: StructVector =>
+            val kids = Array.tabulate(f.getChildren.size)(sub)
+            i => new GenericRow(kids.map(_(i)))
+          case x: UnionVector => union(x.getTypeValue, identity)
+          case x: DenseUnionVector => union(x.getTypeId(_).toInt, x.getOffset)
+          case x: RunEndEncodedVector =>
+            val ends = x.getRunEndsVector.asInstanceOf[BaseIntVector]
+            val values = cell(f.getChildren.get(1), x.getValuesVector, dicts, cap)
+            req(ends.getValueCount == x.getValuesVector.getValueCount,
+              s"arrow: run-end-encoded '${f.getName}' has ${ends.getValueCount} run ends for ${x.getValuesVector.getValueCount} values")
+            val last = (0 until ends.getValueCount).foldLeft(0L) { (prev, j) =>
+              val e = ends.getValueAsLong(j)
+              req(e > prev && e <= Int.MaxValue, s"arrow: run ends of '${f.getName}' must increase strictly (got $e after $prev)")
+              e
+            }
+            req(last >= x.getValueCount, s"arrow: run-end-encoded '${f.getName}' runs cover only $last of ${x.getValueCount} rows")
+            i => values(x.getPhysicalIndex(i))
+          case _ => fail(s"arrow: unsupported type ${f.getType} for field '${f.getName}'")
+        }
+    }
+    v match { // unions and runs carry their nulls in the children
+      case _: UnionVector | _: DenseUnionVector | _: RunEndEncodedVector => read
+      case _ => i => if (v.isNull(i)) null else read(i)
+    }
   }
 
-  def batchRows(schema: ASchema, b: Batch): Iterator[Row] =
-    (0 until b.rows).iterator.map { i =>
-      Row.fromSeq(schema.fields.zipWithIndex.map { case (f, c) => toRowValue(f, b.columns(c)(i)) })
+  private def isText(v: ValueVector): Boolean = v match {
+    case _: VarCharVector | _: LargeVarCharVector | _: ViewVarCharVector => true
+    case _ => false
+  }
+
+  private def rowsOf(root: VectorSchemaRoot, dicts: java.util.Map[java.lang.Long, Dictionary], cap: Long): Seq[Row] = {
+    val cols = root.getSchema.getFields.asScala.toArray.zip(root.getFieldVectors.asScala).map { case (f, v) => cell(f, v, dicts, cap) }
+    Vector.tabulate(root.getRowCount)(r => new GenericRow(cols.map(_(r))))
+  }
+
+  // ----------------------------------------------------------------- reads
+
+  private def read(ch: SeekableByteChannel, off: Long, n: Int): Array[Byte] = {
+    val b = ByteBuffer.allocate(n)
+    ch.position(off)
+    while (b.hasRemaining) req(ch.read(b) >= 0, s"arrow: truncated at ranged read ($off,$n)")
+    b.array
+  }
+
+  /** An IPC FILE opened for ranged reads. Opening touches only the
+    * 8-byte head magic, the 10-byte tail and the footer flatbuffer — a
+    * driver plans a 100 GB shard from three small reads — bounds every
+    * block extent against the file so fetch tasks can trust them, and
+    * checks the schema has a Spark face. */
+  final class IpcFile(ch: SeekableByteChannel) {
+    val footer: ArrowFooter = guarded("footer") {
+      val len = ch.size
+      req(len >= 24, s"arrow: file too short ($len bytes)")
+      req(read(ch, 0, 8).sameElements(Magic ++ Array[Byte](0, 0)), "arrow: bad file magic")
+      val tail = read(ch, len - 10, 10)
+      req(tail.drop(4).sameElements(Magic), "arrow: bad trailing magic")
+      val fLen = ByteBuffer.wrap(tail).order(ByteOrder.LITTLE_ENDIAN).getInt(0)
+      req(fLen > 0 && fLen <= len - 18, s"arrow: footer length $fLen out of range")
+      val f = new ArrowFooter(Footer.getRootAsFooter(ByteBuffer.wrap(read(ch, len - 10 - fLen, fLen))))
+      (f.getDictionaries.asScala ++ f.getRecordBatches.asScala).foreach { b =>
+        // overflow-safe: subtract the bounded lengths instead of summing hostile ones
+        req(b.getOffset >= 8 && b.getMetadataLength > 0 && b.getBodyLength >= 0 &&
+          b.getOffset <= len - 10 - fLen - b.getMetadataLength - b.getBodyLength,
+          s"arrow: block extent (${b.getOffset},${b.getMetadataLength},${b.getBodyLength}) outside file of $len")
+      }
+      f
+    }
+    def schema: Schema = footer.getSchema
+    val face: StructType = guarded("schema")(sparkSchema(schema))
+    def batches: Int = footer.getRecordBatches.size
+
+    /** Rows of record batch `i` holding only the top-level fields at
+      * `wanted` (schema positions, in schema order). */
+    def rows(i: Int, wanted: Seq[Int]): Seq[Row] = guarded("record batch") {
+      val fields = schema.getFields.asScala.toIndexedSeq
+      val blk = footer.getRecordBatches.get(i)
+      val blocks = blk +: footer.getDictionaries.asScala.toSeq
+      Using.resource(allocator(blocks.map(b => b.getMetadataLength + b.getBodyLength).sum)) { alloc =>
+        val dicts = new java.util.HashMap[java.lang.Long, Dictionary]()
+        try {
+          val memory = wanted.map(w => DictionaryUtility.toMemoryFormat(fields(w), alloc, dicts))
+          loadDictionaries(dicts)
+          Using.resource(VectorSchemaRoot.create(new Schema(memory.asJava), alloc)) { root =>
+            val m = header(blk, MessageHeader.RecordBatch)
+            Using.resource(body(blk, alloc)(MessageSerializer.deserializeRecordBatch(m, _))) { b =>
+              Using.resource(prune(b, fields, wanted.toSet))(new VectorLoader(root, CommonsCompressionFactory.INSTANCE).load)
+            }
+            rowsOf(root, dicts, alloc.getLimit)
+          }
+        } finally dicts.values.forEach(_.getVector.close())
+      }
     }
 
-  /** Ranged split scan over FILE-format paths: the driver reads each
-    * footer (tail-only); one fetch task per record batch ranged-reads
-    * exactly its block extent. Dictionary blocks (metadata-scale by
-    * design) decode once per task. */
-  def scan(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    req(paths.nonEmpty, "arrow: no paths")
-    val plans = paths.map { p =>
-      val raf = new java.io.RandomAccessFile(p, "r")
-      try {
-        val len = raf.length()
-        val f = footer(rangedOf(raf), len)
-        (p, f)
-      } finally raf.close()
-    }
-    val schema0 = plans.head._2.schema
-    plans.foreach { case (p, f) => req(f.schema == schema0, s"arrow: schema drift in $p") }
-    val sparkSchema0 = sparkSchema(schema0)
-    val tasks = plans.flatMap { case (p, f) => f.batches.indices.map(i => (p, i)) }
-    val rdd = spark.sparkContext
-      .parallelize(tasks, math.max(1, math.min(tasks.length, spark.sparkContext.defaultParallelism)))
-      .mapPartitions { it =>
-        it.flatMap { case (p, i) =>
-          val raf = new java.io.RandomAccessFile(p, "r")
-          try {
-            val ranged = rangedOf(raf)
-            val f = footer(ranged, raf.length())
-            val dicts = f.dictionaries.map { blk =>
-              val msg = ranged(blk.offset, (blk.metaLen.toLong + blk.bodyLen).toInt)
-              decodeDictionaryMessage(msg, 0, f.schema)
-            }.toMap
-            val blk = f.batches(i)
-            val msg = ranged(blk.offset, (blk.metaLen.toLong + blk.bodyLen).toInt)
-            batchRows(f.schema, decodeBatchMessage(msg, 0, f.schema, dicts)).toVector
-          } finally raf.close()
+    /** Load the dictionaries in `dicts` (the ones wanted fields
+      * reference); every other dictionary block is skipped on its
+      * metadata alone, body unread. */
+    private def loadDictionaries(dicts: java.util.Map[java.lang.Long, Dictionary]): Unit =
+      if (!dicts.isEmpty) footer.getDictionaries.forEach { blk =>
+        val m = header(blk, MessageHeader.DictionaryBatch)
+        Option(dicts.get(m.header(new DictionaryBatch).asInstanceOf[DictionaryBatch].id)).foreach { d =>
+          val v = d.getVector
+          Using.resource(body(blk, v.getAllocator)(MessageSerializer.deserializeDictionaryBatch(m, _))) { db =>
+            req(!db.isDelta, "arrow: delta dictionaries are not supported")
+            new VectorLoader(new VectorSchemaRoot(java.util.List.of(v.getField), java.util.List.of(v), 0),
+              CommonsCompressionFactory.INSTANCE).load(db.getDictionary)
+          }
         }
       }
-    spark.createDataFrame(rdd, sparkSchema0)
+
+    /** Block `blk`'s message flatbuffer, from its metadata bytes alone:
+      * the 8-byte continuation + length prefix (4-byte legacy framing),
+      * then the message. */
+    private def header(blk: ArrowBlock, expected: Byte): Message = {
+      val meta = ByteBuffer.wrap(read(ch, blk.getOffset, blk.getMetadataLength)).order(ByteOrder.LITTLE_ENDIAN)
+      meta.position(if (meta.getInt(0) == MessageSerializer.IPC_CONTINUATION_TOKEN) 8 else 4)
+      val m = Message.getRootAsMessage(meta.slice().order(ByteOrder.LITTLE_ENDIAN))
+      req(m.headerType == expected, s"arrow: block at ${blk.getOffset} holds message type ${m.headerType}, not $expected")
+      m
+    }
+
+    /** Read block `blk`'s body into a buffer of `alloc` and hand it to
+      * `deserialize`, which takes ownership once it succeeds; a failure
+      * releases it here (arrow-java's own block reader leaks its buffer
+      * when the message it frames is malformed). */
+    private def body[T](blk: ArrowBlock, alloc: BufferAllocator)(deserialize: ArrowBuf => T): T = {
+      val buf = alloc.buffer(blk.getBodyLength)
+      try {
+        ch.position(blk.getOffset + blk.getMetadataLength)
+        req(new ReadChannel(ch).readFully(buf, blk.getBodyLength) == blk.getBodyLength, s"arrow: truncated body at ${blk.getOffset}")
+        deserialize(buf)
+      } catch { case e: Throwable => buf.close(); throw e }
+    }
   }
+
+  /** The `keep` fields' share of a record batch — their field nodes,
+    * buffers and variadic counts in the batch's flattened pre-order —
+    * as a batch of its own, so the loader never sees, let alone
+    * decompresses, a pruned column's buffers. */
+  private def prune(b: ArrowRecordBatch, fields: Seq[Field], keep: Int => Boolean): ArrowRecordBatch = {
+    val nodes = b.getNodes.iterator
+    val bufs = b.getBuffers.iterator
+    val vars = b.getVariadicBufferCounts.iterator
+    val (kn, kb, kv) = (new java.util.ArrayList[ArrowFieldNode], new java.util.ArrayList[ArrowBuf], new java.util.ArrayList[java.lang.Long])
+    def walk(f: Field, k: Boolean): Unit = {
+      req(nodes.hasNext, s"arrow: batch has no field node for '${f.getName}'")
+      val node = nodes.next()
+      val t = Option(f.getDictionary).map(_.getIndexType).getOrElse(f.getType)
+      var n = TypeLayout.getTypeBufferCount(t).toLong
+      if (t.isInstanceOf[ArrowType.Utf8View] || t.isInstanceOf[ArrowType.BinaryView]) {
+        req(vars.hasNext, s"arrow: view field '${f.getName}' has no variadic buffer count")
+        val c = vars.next()
+        n += c
+        if (k) kv.add(c)
+      }
+      if (k) kn.add(node)
+      while (n > 0) {
+        req(bufs.hasNext, s"arrow: batch has too few buffers for '${f.getName}'")
+        val x = bufs.next()
+        if (k) kb.add(x)
+        n -= 1
+      }
+      if (f.getDictionary == null) f.getChildren.forEach(walk(_, k))
+    }
+    fields.zipWithIndex.foreach { case (f, i) => walk(f, keep(i)) }
+    new ArrowRecordBatch(b.getLength, kn, kb, b.getBodyCompression, kv, true)
+  }
+
+  /** Run `f` over the FILE at `path` (the DSv2 face's entry point). */
+  private[sources] def open[T](path: String)(f: IpcFile => T): T =
+    Using.resource(java.nio.channels.FileChannel.open(java.nio.file.Paths.get(path)))(ch => f(new IpcFile(ch)))
+
+  /** Decode a whole FILE-format payload: its schema and each record
+    * batch's rows in Spark external form. */
+  def readFileBytes(bytes: Array[Byte]): (Schema, Seq[Seq[Row]]) = {
+    val f = new IpcFile(new ByteArrayReadableSeekableByteChannel(bytes))
+    val all = f.schema.getFields.asScala.indices
+    (f.schema, (0 until f.batches).map(f.rows(_, all)))
+  }
+
+  /** Decode a whole STREAM-format payload (`.arrows`). Streams have no
+    * footer, and arrow-java sizes each message's metadata buffer from
+    * its length prefix before reading it, so every prefix and body
+    * length is first bounded against the bytes actually present. */
+  def readStreamBytes(bytes: Array[Byte]): (Schema, Seq[Seq[Row]]) = guarded("stream") {
+    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    var p = 0L
+    while (p + 4 <= bytes.length) {
+      // continuation + length, or the legacy bare length
+      val at = if (bb.getInt(p.toInt) == MessageSerializer.IPC_CONTINUATION_TOKEN) p + 8 else p + 4
+      req(at <= bytes.length, "arrow: truncated message prefix")
+      val n = bb.getInt(at.toInt - 4)
+      if (n == 0) p = bytes.length // end-of-stream marker
+      else {
+        req(n > 0 && n <= bytes.length - at, s"arrow: message length $n beyond the stream")
+        val body = Message.getRootAsMessage(
+          bb.duplicate().position(at.toInt).limit((at + n).toInt).slice().order(ByteOrder.LITTLE_ENDIAN)).bodyLength
+        req(body >= 0 && body <= bytes.length - at - n, s"arrow: message body $body beyond the stream")
+        p = at + n + body
+      }
+    }
+    Using.resource(allocator(bytes.length)) { alloc =>
+      Using.resource(new ArrowStreamReader(new java.io.ByteArrayInputStream(bytes), alloc, CommonsCompressionFactory.INSTANCE)) { r =>
+        val root = r.getVectorSchemaRoot
+        val schema = new Schema(root.getSchema.getFields.asScala
+          .map(DictionaryUtility.toMessageFormat(_, r, new java.util.HashSet[java.lang.Long])).asJava)
+        sparkSchema(schema)
+        val batches = Vector.newBuilder[Seq[Row]]
+        while (r.loadNextBatch()) batches += rowsOf(root, r.getDictionaryVectors, alloc.getLimit)
+        (schema, batches.result())
+      }
+    }
+  }
+
+  // ---------------------------------------------------------------- writes
+
+  /** Spark column -> Arrow field: the write matrix. decimal(20,0) writes
+    * back as a genuine u64; other types refuse. */
+  def arrowField(f: StructField): Field = {
+    def fld(t: ArrowType, kids: Field*) = new Field(f.name, new FieldType(f.nullable, t, null), kids.asJava)
+    f.dataType match {
+      case ByteType => fld(new ArrowType.Int(8, true))
+      case ShortType => fld(new ArrowType.Int(16, true))
+      case IntegerType => fld(new ArrowType.Int(32, true))
+      case LongType => fld(new ArrowType.Int(64, true))
+      case FloatType => fld(new ArrowType.FloatingPoint(FloatingPointPrecision.SINGLE))
+      case DoubleType => fld(new ArrowType.FloatingPoint(FloatingPointPrecision.DOUBLE))
+      case StringType => fld(ArrowType.Utf8.INSTANCE)
+      case BinaryType => fld(ArrowType.Binary.INSTANCE)
+      case BooleanType => fld(ArrowType.Bool.INSTANCE)
+      case d: DecimalType if d.precision == 20 && d.scale == 0 => fld(new ArrowType.Int(64, false))
+      case DateType => fld(new ArrowType.Date(DateUnit.DAY))
+      case TimestampType => fld(new ArrowType.Timestamp(TimeUnit.MICROSECOND, "UTC"))
+      case ArrayType(et, containsNull) => fld(ArrowType.List.INSTANCE, arrowField(StructField("item", et, containsNull)))
+      case st: StructType => fld(ArrowType.Struct.INSTANCE, st.fields.toSeq.map(arrowField): _*)
+      case MapType(kt, vt, valueContainsNull) =>
+        fld(new ArrowType.Map(false), new Field("entries", FieldType.notNullable(ArrowType.Struct.INSTANCE),
+          java.util.List.of(arrowField(StructField("key", kt, nullable = false)), arrowField(StructField("value", vt, valueContainsNull)))))
+      case dt => fail(s"arrowipc write: unsupported type $dt for '${f.name}'")
+    }
+  }
+
+  def arrowSchema(s: StructType): Schema = new Schema(s.fields.toSeq.map(arrowField).asJava)
+
+  private[sources] def codecOf(name: String): CompressionUtil.CodecType = name.toLowerCase match {
+    case "none" | "" => CompressionUtil.CodecType.NO_COMPRESSION
+    case "lz4" => CompressionUtil.CodecType.LZ4_FRAME
+    case "zstd" => CompressionUtil.CodecType.ZSTD
+    case other => throw new IllegalArgumentException(s"arrowipc: unknown codec '$other' (none|lz4|zstd)")
+  }
+
+  /** Set slot `i` of `v` from a Spark external value; a null leaves the
+    * slot unset, which arrow-java reads as null. */
+  private def put(v: FieldVector, i: Int, x: Any): Unit = if (x != null) (v, x) match {
+    case (w: UInt8Vector, d: java.math.BigDecimal) =>
+      val big = d.toBigIntegerExact
+      req(big.signum >= 0 && big.bitLength <= 64, s"arrowipc write: $big outside uint64")
+      w.setWithPossibleTruncate(i, big.longValue) // raw two's-complement low 64 bits
+    case (w: BaseIntVector, n: java.lang.Number) => w.setWithPossibleTruncate(i, n.longValue)
+    case (w: FloatingPointVector, n: java.lang.Number) => w.setSafeWithPossibleTruncate(i, n.doubleValue)
+    case (w: BitVector, b: Boolean) => w.setSafe(i, if (b) 1 else 0)
+    case (w: VariableWidthFieldVector, s: String) if isText(w) => w.setSafe(i, s.getBytes(UTF_8))
+    case (w: VariableWidthFieldVector, b: Array[Byte]) if !isText(w) => w.setSafe(i, b)
+    case (w: DateDayVector, d: java.time.LocalDate) => w.setSafe(i, d.toEpochDay.toInt)
+    case (w: DateDayVector, d: java.sql.Date) => w.setSafe(i, d.toLocalDate.toEpochDay.toInt)
+    case (w: TimeStampMicroTZVector, t: java.time.Instant) => w.setSafe(i, t.getEpochSecond * 1000000L + t.getNano / 1000L)
+    case (w: TimeStampMicroTZVector, t: java.sql.Timestamp) =>
+      // Spark's fromJavaTimestamp: getTime already floors pre-epoch
+      // instants to the milli; only the sub-milli nanos add on top
+      w.setSafe(i, t.getTime * 1000L + (t.getNanos / 1000L) % 1000L)
+    case (w: MapVector, m: scala.collection.Map[_, _]) =>
+      val e = w.getDataVector.asInstanceOf[StructVector]
+      val at = w.startNewValue(i)
+      m.iterator.zipWithIndex.foreach { case ((k, mv), j) =>
+        req(k != null, "arrow writer: map keys must be non-null")
+        e.setIndexDefined(at + j)
+        put(e.getChildrenFromFields.get(0), at + j, k)
+        put(e.getChildrenFromFields.get(1), at + j, mv)
+      }
+      w.endValue(i, m.size)
+    case (w: ListVector, s: scala.collection.Seq[_]) => w.endValue(i, fill(w.getDataVector, w.startNewValue(i), s))
+    case (w: ListViewVector, s: scala.collection.Seq[_]) => w.endValue(i, fill(w.getDataVector, w.startNewValue(i), s))
+    case (w: LargeListViewVector, s: scala.collection.Seq[_]) => w.endValue(i, fill(w.getDataVector, w.startNewValue(i), s))
+    case (w: StructVector, r: Row) =>
+      w.setIndexDefined(i)
+      w.getChildrenFromFields.asScala.zipWithIndex.foreach { case (c, j) => put(c, i, r.get(j)) }
+    case _ => fail(s"arrow writer: ${x.getClass.getSimpleName} value for field ${v.getField}")
+  }
+
+  private def fill(child: FieldVector, at: Int, s: scala.collection.Seq[_]): Int = {
+    s.iterator.zipWithIndex.foreach { case (e, j) => put(child, at + j, e) }
+    s.size
+  }
+
+  /** Run-length compress a column into a run-end-encoded vector: each
+    * run of equal adjacent values becomes one (run end, value) pair. */
+  private def runs(v: RunEndEncodedVector, xs: Seq[Any]): Unit = {
+    val ends = v.getRunEndsVector.asInstanceOf[BaseIntVector]
+    var n = 0
+    xs.indices.foreach { i =>
+      if (i == 0 || !java.util.Objects.deepEquals(xs(i - 1), xs(i))) { put(v.getValuesVector, n, xs(i)); n += 1 }
+      ends.setWithPossibleTruncate(n - 1, i + 1L)
+    }
+    ends.setValueCount(n)
+    v.getValuesVector.setValueCount(n)
+  }
+
+  /** Streams record batches of Spark external rows (Row / Seq / Map /
+    * LocalDate or Date / Instant or Timestamp, BigDecimal for u64) into
+    * an IPC FILE or STREAM on `out`, bodies compressed per `codec`
+    * (none | lz4 | zstd) by arrow-compression. One batch of vectors is
+    * live at a time; `close` ends the payload and closes `out`. */
+  final class Writer(out: WritableByteChannel, schema: Schema, codec: String, file: Boolean) extends AutoCloseable {
+    private def encoded(f: Field): Boolean = f.getDictionary != null || f.getChildren.asScala.exists(encoded)
+    req(!schema.getFields.asScala.exists(encoded), "arrow writer: dictionary encoding is read-only")
+    private val alloc = new RootAllocator()
+    private val (root, w) = guarded("write") {
+      val root = VectorSchemaRoot.create(schema, alloc)
+      val t = codecOf(codec)
+      val factory = if (t == CompressionUtil.CodecType.NO_COMPRESSION) NoCompressionCodec.Factory.INSTANCE else CommonsCompressionFactory.INSTANCE
+      val w: ArrowWriter =
+        if (file) new ArrowFileWriter(root, null, out, java.util.Map.of[String, String](), IpcOption.DEFAULT, factory, t)
+        else new ArrowStreamWriter(root, null, out, IpcOption.DEFAULT, factory, t)
+      w.start()
+      (root, w)
+    }
+    private var open = true
+
+    def batch(rows: Seq[Row]): Unit = guarded("write") {
+      root.allocateNew()
+      root.getFieldVectors.asScala.zipWithIndex.foreach {
+        case (v: RunEndEncodedVector, c) => runs(v, rows.map(_.get(c)))
+        case (v, c) => rows.iterator.zipWithIndex.foreach { case (r, i) => put(v, i, r.get(c)) }
+      }
+      root.setRowCount(rows.size)
+      w.writeBatch()
+    }
+
+    def close(): Unit = if (open) {
+      open = false
+      try guarded("write")(w.close())
+      finally { root.close(); alloc.close() }
+    }
+  }
+
+  /** Encode `batches` as a whole FILE or STREAM payload in memory. */
+  def writeBytes(schema: Schema, batches: Seq[Seq[Row]], codec: String = "none", file: Boolean = true): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    Using.resource(new Writer(java.nio.channels.Channels.newChannel(bos), schema, codec, file))(w => batches.foreach(w.batch))
+    bos.toByteArray
+  }
+
+  // --------------------------------------------------------------- streaming
 
   /** Streaming twin: continuously ingest `.arrow`/`.arrows` shards
     * dropped into a directory (the shard-landing-zone shape). Schema
@@ -1208,661 +621,22 @@ object ArrowIpc {
         val (as, batches) = if (isFile) readFileBytes(content) else readStreamBytes(content)
         val got = sparkSchema(as)
         req(got == expected, s"arrow stream: schema drift — $path has $got, stream declared $expected")
-        batches.iterator.flatMap(b => batchRows(as, b).map(r => Row.fromSeq(path +: r.toSeq)))
+        batches.iterator.flatten.map(r => Row.fromSeq(path +: r.toSeq))
       }(outEnc)
       .toDF()
   }
 
-  private[sources] def rangedOf(raf: java.io.RandomAccessFile): (Long, Int) => Array[Byte] =
-    (off, n) => {
-      req(n >= 0 && off >= 0, s"arrow: ranged read ($off,$n)")
-      val out = new Array[Byte](n)
-      try { raf.seek(off); raf.readFully(out) }
-      catch { case _: java.io.EOFException => fail(s"arrow: truncated at ranged read ($off,$n)") }
-      out
-    }
-
-  // ---------------------------------------------------------------- builder
-
-  /** Minimal flatbuffers builder (back-to-front, standard algorithm,
-    * no vtable dedup — our tables are few and tiny). */
-  private final class FbBuilder(initial: Int = 1024) {
-    private var buf = new Array[Byte](math.max(initial, 64))
-    private var space = buf.length
-    private var minalign = 1
-    private val slots = new Array[Int](16)
-    private val slotSizes = new Array[Int](16)
-    private var numSlots = 0
-
-    def offset: Int = buf.length - space
-
-    private def grow(needed: Int): Unit = {
-      if (space >= needed) return
-      val used = buf.length - space
-      var n = buf.length
-      while (n - used < needed) n <<= 1
-      val nb = new Array[Byte](n)
-      System.arraycopy(buf, space, nb, n - used, used)
-      buf = nb; space = n - used
-    }
-
-    private def pad(n: Int): Unit = { grow(n); var i = 0; while (i < n) { space -= 1; buf(space) = 0; i += 1 } }
-
-    def prep(size: Int, additional: Int): Unit = {
-      if (size > minalign) minalign = size
-      val alignSize = (~(offset + additional) + 1) & (size - 1)
-      grow(alignSize + size + additional)
-      pad(alignSize)
-    }
-
-    def putByte(v: Int): Unit = { space -= 1; buf(space) = v.toByte }
-    def putShort(v: Int): Unit = { space -= 2; buf(space) = v.toByte; buf(space + 1) = (v >> 8).toByte }
-    def putInt(v: Int): Unit = {
-      space -= 4
-      buf(space) = v.toByte; buf(space + 1) = (v >> 8).toByte
-      buf(space + 2) = (v >> 16).toByte; buf(space + 3) = (v >> 24).toByte
-    }
-
-    def prependInt(v: Int): Unit = { prep(4, 0); putInt(v) }
-    /** 4 LE bytes, no prep — for elements inside a startVector'd span. */
-    def putIntRaw(v: Int): Unit = putInt(v)
-    /** 8 LE bytes, back-to-front safe: high word first so the low
-      * word lands at the lower address. Caller must have prep'd. */
-    def prependLongRaw(v: Long): Unit = { putInt((v >>> 32).toInt); putInt(v.toInt) }
-
-    def prependUOffset(o: Int): Unit = { prep(4, 0); putUOffset(o) }
-    def putUOffset(o: Int): Unit = { val rel = (offset + 4) - o; putInt(rel) }
-
-    def createString(s: String): Int = createBytesZ(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    private def createBytesZ(bs: Array[Byte]): Int = {
-      prep(4, bs.length + 1)
-      space -= bs.length + 1
-      System.arraycopy(bs, 0, buf, space, bs.length)
-      buf(space + bs.length) = 0
-      putInt(bs.length)
-      offset
-    }
-
-    def startVector(elemSize: Int, count: Int, alignment: Int): Unit = {
-      prep(4, elemSize * count)
-      prep(alignment, elemSize * count)
-    }
-    def endVector(count: Int): Int = { putInt(count); offset }
-
-    def startTable(n: Int): Unit = {
-      java.util.Arrays.fill(slots, 0, n, 0)
-      java.util.Arrays.fill(slotSizes, 0, n, 0)
-      numSlots = n
-    }
-    private def mark(id: Int, size: Int): Unit = { slots(id) = offset; slotSizes(id) = size }
-    def slotByte(id: Int, v: Int): Unit = { prep(1, 0); putByte(v); mark(id, 1) }
-    def slotShort(id: Int, v: Int): Unit = { prep(2, 0); putShort(v); mark(id, 2) }
-    def slotInt(id: Int, v: Int): Unit = { prep(4, 0); putInt(v); mark(id, 4) }
-    def slotLong(id: Int, v: Long): Unit = { prep(8, 0); prependLongRaw(v); mark(id, 8) }
-    def slotBool(id: Int, v: Boolean): Unit = slotByte(id, if (v) 1 else 0)
-    def slotUOffset(id: Int, o: Int): Unit = if (o != 0) { prependUOffset(o); mark(id, 4) }
-
-    def endTable(): Int = {
-      prependInt(0) // soffset placeholder
-      val tableOff = offset
-      var tsize = 4
-      var i = 0
-      while (i < numSlots) {
-        if (slots(i) != 0) {
-          val end = tableOff - slots(i) + slotSizes(i)
-          if (end > tsize) tsize = end
-        }
-        i += 1
-      }
-      val vtBytes = 4 + 2 * numSlots
-      prep(2, vtBytes)
-      i = numSlots - 1
-      while (i >= 0) {
-        putShort(if (slots(i) == 0) 0 else tableOff - slots(i))
-        i -= 1
-      }
-      putShort(tsize)
-      putShort(vtBytes)
-      val vtOff = offset
-      // patch the table's soffset: vtable is at a LARGER offset
-      val pos = buf.length - tableOff
-      val so = vtOff - tableOff
-      buf(pos) = so.toByte; buf(pos + 1) = (so >> 8).toByte
-      buf(pos + 2) = (so >> 16).toByte; buf(pos + 3) = (so >> 24).toByte
-      tableOff
-    }
-
-    def finish(root: Int): Array[Byte] = {
-      prep(minalign, 4) // total size ends up minalign-aligned, so
-      putUOffset(root) // start-relative alignment == end-relative
-      java.util.Arrays.copyOfRange(buf, space, buf.length)
-    }
-  }
-
-  // ----------------------------------------------------------------- writer
-
-  /** Writer support matrix (flat encode; nested = list / fixed-size
-    * list / struct of these): signed ints, single/double floats,
-    * bool, utf8, binary, date32, timestamp, time64, duration. */
-  private def writeType(bld: FbBuilder, f: AField): (Int, Int) = f.tpe match {
-    case AInt(bits, signed) =>
-      bld.startTable(2); bld.slotInt(0, bits); bld.slotBool(1, signed); (TInt, bld.endTable())
-    case AFloat(p) =>
-      bld.startTable(1); bld.slotShort(0, p); (TFloat, bld.endTable())
-    case AUtf8 => bld.startTable(0); (TUtf8, bld.endTable())
-    case ABinary => bld.startTable(0); (TBinary, bld.endTable())
-    case ABool => bld.startTable(0); (TBool, bld.endTable())
-    case ADate(u) => bld.startTable(1); bld.slotShort(0, u); (TDate, bld.endTable())
-    case ATimestamp(u, tz) =>
-      val tzOff = if (tz.isEmpty) 0 else bld.createString(tz)
-      bld.startTable(2); bld.slotShort(0, u); bld.slotUOffset(1, tzOff); (TTimestamp, bld.endTable())
-    case ATime(u, bits) => bld.startTable(2); bld.slotShort(0, u); bld.slotInt(1, bits); (TTime, bld.endTable())
-    case ADuration(u) => bld.startTable(1); bld.slotShort(0, u); (TDuration, bld.endTable())
-    case AList => bld.startTable(0); (TList, bld.endTable())
-    case AFixedSizeList(k) => bld.startTable(1); bld.slotInt(0, k); (TFixedSizeList, bld.endTable())
-    case AStruct => bld.startTable(0); (TStruct, bld.endTable())
-    case AMap(sorted) => bld.startTable(1); bld.slotBool(0, sorted); (TMap, bld.endTable())
-    case AView(utf8) => bld.startTable(0); (if (utf8) TUtf8View else TBinaryView, bld.endTable())
-    case AUnion(dense, typeIds) =>
-      bld.startVector(4, typeIds.length, 4)
-      typeIds.reverse.foreach(bld.putIntRaw)
-      val vec = bld.endVector(typeIds.length)
-      bld.startTable(2)
-      bld.slotShort(0, if (dense) 1 else 0)
-      bld.slotUOffset(1, vec)
-      (TUnion, bld.endTable())
-    case ARee => bld.startTable(0); (TRunEndEncoded, bld.endTable())
-    case AListView(wide) =>
-      bld.startTable(0); (if (wide) TLargeListView else TListView, bld.endTable())
-    case t => fail(s"arrow writer: unsupported type $t")
-  }
-
-  private def writeField(bld: FbBuilder, f: AField): Int = {
-    req(f.dictId < 0, "arrow writer: dictionary encoding is read-only")
-    val nameOff = bld.createString(f.name)
-    val childOffs = f.children.map(c => writeField(bld, c))
-    val childVec =
-      if (childOffs.isEmpty) 0
-      else {
-        bld.startVector(4, childOffs.length, 4)
-        childOffs.reverse.foreach(bld.putUOffset)
-        bld.endVector(childOffs.length)
-      }
-    val (tag, typeOff) = writeType(bld, f)
-    bld.startTable(7)
-    bld.slotUOffset(0, nameOff)
-    bld.slotBool(1, f.nullable)
-    bld.slotByte(2, tag)
-    bld.slotUOffset(3, typeOff)
-    bld.slotUOffset(5, childVec)
-    bld.endTable()
-  }
-
-  private def writeSchemaTable(bld: FbBuilder, s: ASchema): Int = {
-    val fieldOffs = s.fields.map(f => writeField(bld, f))
-    val vec =
-      if (fieldOffs.isEmpty) 0
-      else {
-        bld.startVector(4, fieldOffs.length, 4)
-        fieldOffs.reverse.foreach(bld.putUOffset)
-        bld.endVector(fieldOffs.length)
-      }
-    bld.startTable(4)
-    bld.slotShort(0, 0) // little-endian
-    bld.slotUOffset(1, vec)
-    bld.endTable()
-  }
-
-  private def messageBytes(headerType: Int, buildHeader: FbBuilder => Int, bodyLen: Long): Array[Byte] = {
-    val bld = new FbBuilder(512)
-    val h = buildHeader(bld)
-    bld.startTable(5)
-    bld.slotShort(0, 4) // MetadataVersion V5
-    bld.slotByte(1, headerType)
-    bld.slotUOffset(2, h)
-    bld.slotLong(3, bodyLen)
-    bld.finish(bld.endTable())
-  }
-
-  /** Frame one message: continuation + i32 len + padded metadata. */
-  private def frame(out: java.io.ByteArrayOutputStream, meta: Array[Byte]): Unit = {
-    val unpadded = meta.length
-    val padded = (unpadded + 7) & ~7 // continuation(4)+len(4) keep 8-alignment
-    out.write(Array[Byte](-1, -1, -1, -1))
-    out.write(Array[Byte](padded.toByte, (padded >> 8).toByte, (padded >> 16).toByte, (padded >> 24).toByte))
-    out.write(meta)
-    var i = unpadded
-    while (i < padded) { out.write(0); i += 1 }
-  }
-
-  // ---- column encode: raw values -> validity/data buffers
-
-  private def validityOf(vals: Array[Any]): (Array[Byte], Long) = {
-    var nulls = 0L
-    val bm = new Array[Byte]((vals.length + 7) / 8)
-    var i = 0
-    while (i < vals.length) {
-      if (vals(i) == null) nulls += 1
-      else bm(i >> 3) = (bm(i >> 3) | (1 << (i & 7))).toByte
-      i += 1
-    }
-    (bm, nulls)
-  }
-
-  private def encodeColumn(
-      f: AField,
-      vals: Array[Any],
-      nodes: scala.collection.mutable.ArrayBuffer[(Long, Long)],
-      bufs: scala.collection.mutable.ArrayBuffer[Array[Byte]],
-      varCounts: scala.collection.mutable.ArrayBuffer[Long]): Unit = {
-    val n = vals.length
-    val (bm, nulls) = validityOf(vals)
-    nodes += ((n.toLong, nulls))
-    def le32b(v: Int, a: Array[Byte], p: Int): Unit = {
-      a(p) = v.toByte; a(p + 1) = (v >> 8).toByte; a(p + 2) = (v >> 16).toByte; a(p + 3) = (v >> 24).toByte
-    }
-    def le64b(v: Long, a: Array[Byte], p: Int): Unit = { le32b(v.toInt, a, p); le32b((v >>> 32).toInt, a, p + 4) }
-    f.tpe match {
-      case AInt(bits, _) => // unsigned widths take raw low bits (u64 = the decimal carrier's two's complement)
-        bufs += bm
-        val w = bits / 8
-        val d = new Array[Byte](n * w)
-        var i = 0
-        while (i < n) {
-          val v = vals(i) match {
-            case null => 0L
-            case x: java.lang.Number => x.longValue
-            case x => fail(s"arrow writer: int value ${x.getClass.getSimpleName}")
-          }
-          bits match {
-            case 8 => d(i) = v.toByte
-            case 16 => d(2 * i) = v.toByte; d(2 * i + 1) = (v >> 8).toByte
-            case 32 => le32b(v.toInt, d, 4 * i)
-            case _ => le64b(v, d, 8 * i)
-          }
-          i += 1
-        }
-        bufs += d
-      case AFloat(1) =>
-        bufs += bm
-        val d = new Array[Byte](n * 4)
-        var i = 0
-        while (i < n) {
-          val v = vals(i) match { case null => 0f; case x: java.lang.Number => x.floatValue }
-          le32b(java.lang.Float.floatToIntBits(v), d, 4 * i); i += 1
-        }
-        bufs += d
-      case AFloat(2) =>
-        bufs += bm
-        val d = new Array[Byte](n * 8)
-        var i = 0
-        while (i < n) {
-          val v = vals(i) match { case null => 0d; case x: java.lang.Number => x.doubleValue }
-          le64b(java.lang.Double.doubleToLongBits(v), d, 8 * i); i += 1
-        }
-        bufs += d
-      case ABool =>
-        bufs += bm
-        val d = new Array[Byte]((n + 7) / 8)
-        var i = 0
-        while (i < n) {
-          if (vals(i) != null && vals(i).asInstanceOf[Boolean]) d(i >> 3) = (d(i >> 3) | (1 << (i & 7))).toByte
-          i += 1
-        }
-        bufs += d
-      case AUtf8 | ABinary =>
-        bufs += bm
-        val offs = new Array[Byte](4 * (n + 1))
-        val data = new java.io.ByteArrayOutputStream()
-        var i = 0
-        while (i < n) {
-          le32b(data.size, offs, 4 * i)
-          vals(i) match {
-            case null => ()
-            case s: String => data.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            case a: Array[Byte] => data.write(a)
-            case x => fail(s"arrow writer: var value ${x.getClass.getSimpleName}")
-          }
-          i += 1
-        }
-        le32b(data.size, offs, 4 * n)
-        bufs += offs
-        bufs += data.toByteArray
-      case ADate(0) | ATime(_, 32) =>
-        bufs += bm
-        val d = new Array[Byte](n * 4)
-        var i = 0
-        while (i < n) {
-          val v = vals(i) match { case null => 0; case x: java.lang.Number => x.intValue }
-          le32b(v, d, 4 * i); i += 1
-        }
-        bufs += d
-      case ATimestamp(_, _) | ADuration(_) | ATime(_, 64) | ADate(_) =>
-        bufs += bm
-        val d = new Array[Byte](n * 8)
-        var i = 0
-        while (i < n) {
-          val v = vals(i) match { case null => 0L; case x: java.lang.Number => x.longValue }
-          le64b(v, d, 8 * i); i += 1
-        }
-        bufs += d
-      case AList =>
-        req(f.children.length == 1, "arrow writer: list needs one child")
-        bufs += bm
-        val offs = new Array[Byte](4 * (n + 1))
-        val flat = scala.collection.mutable.ArrayBuffer.empty[Any]
-        var i = 0
-        while (i < n) {
-          le32b(flat.length, offs, 4 * i)
-          vals(i) match {
-            case null => ()
-            case s: Seq[_] => flat ++= s
-            case x => fail(s"arrow writer: list value ${x.getClass.getSimpleName}")
-          }
-          i += 1
-        }
-        le32b(flat.length, offs, 4 * n)
-        bufs += offs
-        encodeColumn(f.children.head, flat.toArray, nodes, bufs, varCounts)
-      case AFixedSizeList(k) =>
-        req(f.children.length == 1, "arrow writer: fixed-size list needs one child")
-        bufs += bm
-        val flat = new Array[Any](n * k)
-        var i = 0
-        while (i < n) {
-          vals(i) match {
-            case null => ()
-            case s: Seq[_] =>
-              req(s.length == k, s"arrow writer: fixed list size ${s.length} != $k")
-              var j = 0; while (j < k) { flat(i * k + j) = s(j); j += 1 }
-            case x => fail(s"arrow writer: fixed list value ${x.getClass.getSimpleName}")
-          }
-          i += 1
-        }
-        encodeColumn(f.children.head, flat, nodes, bufs, varCounts)
-      case AStruct =>
-        bufs += bm
-        f.children.zipWithIndex.foreach { case (c, ci) =>
-          val kid = new Array[Any](n)
-          var i = 0
-          while (i < n) {
-            vals(i) match {
-              case null => ()
-              case s: Seq[_] => kid(i) = s(ci)
-              case x => fail(s"arrow writer: struct value ${x.getClass.getSimpleName}")
-            }
-            i += 1
-          }
-          encodeColumn(c, kid, nodes, bufs, varCounts)
-        }
-      case AMap(_) =>
-        // list layout over the entries struct; values are the reader's
-        // shape — a Seq of Vector(key, value) entries
-        req(f.children.length == 1, "arrow writer: map needs one entries child")
-        bufs += bm
-        val offs = new Array[Byte](4 * (n + 1))
-        val flat = scala.collection.mutable.ArrayBuffer.empty[Any]
-        var i = 0
-        while (i < n) {
-          le32b(flat.length, offs, 4 * i)
-          vals(i) match {
-            case null => ()
-            case s: Seq[_] =>
-              s.foreach { e =>
-                req(e != null && e.asInstanceOf[Seq[Any]].head != null,
-                  "arrow writer: map entries and keys must be non-null")
-                flat += e
-              }
-            case x => fail(s"arrow writer: map value ${x.getClass.getSimpleName}")
-          }
-          i += 1
-        }
-        le32b(flat.length, offs, 4 * n)
-        bufs += offs
-        encodeColumn(f.children.head, flat.toArray, nodes, bufs, varCounts)
-      case AUnion(dense, typeIds) =>
-        // no validity buffer — the node was recorded above; a union
-        // slot is Vector(typeId, value) with nulls carried by the child
-        req(nulls == 0, "arrow writer: union slots must be Vector(typeId, value); nulls go in the child")
-        val tidToChild = typeIds.zipWithIndex.toMap
-        val types = new Array[Byte](n)
-        val offs = if (dense) new Array[Byte](4 * n) else null
-        val perChild = Array.fill(f.children.length)(scala.collection.mutable.ArrayBuffer.empty[Any])
-        var i = 0
-        while (i < n) {
-          vals(i) match {
-            case s: Seq[_] if s.length == 2 =>
-              val tid = s.head match {
-                case x: java.lang.Number => x.intValue
-                case x => fail(s"arrow writer: union type id ${x.getClass.getSimpleName}")
-              }
-              val ci = tidToChild.getOrElse(tid, fail(s"arrow writer: undeclared union type id $tid"))
-              types(i) = tid.toByte
-              if (dense) {
-                le32b(perChild(ci).length, offs, 4 * i)
-                perChild(ci) += s(1)
-              } else {
-                var j = 0
-                while (j < perChild.length) { perChild(j) += (if (j == ci) s(1) else null); j += 1 }
-              }
-            case x => fail(s"arrow writer: union value $x")
-          }
-          i += 1
-        }
-        bufs += types
-        if (dense) bufs += offs
-        f.children.zip(perChild).foreach { case (c, vs) => encodeColumn(c, vs.toArray, nodes, bufs, varCounts) }
-      case AView(utf8) =>
-        // one variadic data buffer carries every non-inline value;
-        // <=12-byte values inline into the 16-byte view struct
-        bufs += bm
-        val views = new Array[Byte](16 * n)
-        val data = new java.io.ByteArrayOutputStream()
-        var i = 0
-        while (i < n) {
-          val bytes: Array[Byte] = vals(i) match {
-            case null => Array.emptyByteArray
-            case v: String =>
-              req(utf8, "arrow writer: string value in a binary-view column")
-              v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            case v: Array[Byte] =>
-              req(!utf8, "arrow writer: binary value in a utf8-view column")
-              v
-            case x => fail(s"arrow writer: view value ${x.getClass.getSimpleName}")
-          }
-          le32b(bytes.length, views, 16 * i)
-          if (bytes.length <= 12) System.arraycopy(bytes, 0, views, 16 * i + 4, bytes.length)
-          else {
-            System.arraycopy(bytes, 0, views, 16 * i + 4, 4) // prefix
-            le32b(0, views, 16 * i + 8) // buffer index
-            le32b(data.size, views, 16 * i + 12)
-            data.write(bytes)
-          }
-          i += 1
-        }
-        bufs += views
-        bufs += data.toByteArray
-        varCounts += 1L
-      case AListView(wide) =>
-        // dense layout (offsets cumulative, sizes = lengths) — valid
-        // list-view form; readers must handle arbitrary views, writers
-        // may emit the canonical dense one
-        req(f.children.length == 1, "arrow writer: list-view needs one child")
-        bufs += bm
-        val w = if (wide) 8 else 4
-        val offs = new Array[Byte](w * n)
-        val sizes = new Array[Byte](w * n)
-        val flat = scala.collection.mutable.ArrayBuffer.empty[Any]
-        var i = 0
-        while (i < n) {
-          val start = flat.length
-          vals(i) match {
-            case null => ()
-            case s: Seq[_] => s.foreach(flat += _)
-            case x => fail(s"arrow writer: list-view value ${x.getClass.getSimpleName}")
-          }
-          if (wide) { le64b(start.toLong, offs, 8 * i); le64b((flat.length - start).toLong, sizes, 8 * i) }
-          else { le32b(start, offs, 4 * i); le32b(flat.length - start, sizes, 4 * i) }
-          i += 1
-        }
-        bufs += offs
-        bufs += sizes
-        encodeColumn(f.children.head, flat.toArray, nodes, bufs, varCounts)
-      case ARee =>
-        // run-length compress adjacent equal values; the parent owns
-        // no buffers and reports 0 nulls (null runs live in `values`)
-        req(f.children.length == 2, "arrow writer: run-end-encoded needs run_ends + values children")
-        nodes(nodes.length - 1) = ((n.toLong, 0L))
-        val ends = scala.collection.mutable.ArrayBuffer.empty[Any]
-        val runVals = scala.collection.mutable.ArrayBuffer.empty[Any]
-        var i = 0
-        while (i < n) {
-          if (runVals.nonEmpty && java.util.Objects.deepEquals(runVals.last, vals(i)))
-            ends(ends.length - 1) = java.lang.Long.valueOf(i + 1L)
-          else { runVals += vals(i); ends += java.lang.Long.valueOf(i + 1L) }
-          i += 1
-        }
-        encodeColumn(f.children.head, ends.toArray, nodes, bufs, varCounts)
-        encodeColumn(f.children(1), runVals.toArray, nodes, bufs, varCounts)
-      case t => fail(s"arrow writer: unsupported type $t")
-    }
-  }
-
-  /** Encode one record-batch message (metadata + body). codec: -1
-    * none, 0 LZ4_FRAME, 1 ZSTD — compressed buffers carry the i64
-    * uncompressed-length prefix; when compression does not help, the
-    * spec's -1 raw marker is used instead. */
-  private def encodeBatch(schema: ASchema, columns: Array[Array[Any]], rows: Int, codec: Int): Array[Byte] = {
-    val nodes = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val rawBufs = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-    val varCounts = scala.collection.mutable.ArrayBuffer.empty[Long]
-    schema.fields.zipWithIndex.foreach { case (f, i) =>
-      req(columns(i).length == rows, s"arrow writer: column '${f.name}' length drift")
-      encodeColumn(f, columns(i), nodes, rawBufs, varCounts)
-    }
-    val outBufs = rawBufs.map { raw =>
-      if (codec < 0 || raw.isEmpty) raw
-      else {
-        val comp = codec match {
-          case 0 => Lz4.encode(raw)
-          case _ => Zstd.encode(raw)
-        }
-        val pre = new Array[Byte](8)
-        if (comp.length < raw.length) {
-          var i = 0; while (i < 8) { pre(i) = ((raw.length.toLong >> (8 * i)) & 0xff).toByte; i += 1 }
-          pre ++ comp
-        } else {
-          java.util.Arrays.fill(pre, 0xff.toByte) // i64 -1 = stored raw
-          pre ++ raw
-        }
-      }
-    }
-    val body = new java.io.ByteArrayOutputStream()
-    val extents = outBufs.map { b =>
-      while (body.size % 8 != 0) body.write(0)
-      val off = body.size.toLong
-      body.write(b)
-      (off, b.length.toLong)
-    }
-    while (body.size % 8 != 0) body.write(0)
-    val bodyBytes = body.toByteArray
-
-    val meta = messageBytes(HRecordBatch, { bld =>
-      val compOff =
-        if (codec < 0) 0
-        else { bld.startTable(2); bld.slotByte(0, codec); bld.slotByte(1, 0); bld.endTable() }
-      bld.startVector(16, extents.length, 8)
-      extents.reverse.foreach { case (o, l) => bld.prependLongRaw(l); bld.prependLongRaw(o) }
-      val bufVec = bld.endVector(extents.length)
-      bld.startVector(16, nodes.length, 8)
-      nodes.reverse.foreach { case (l, nc) => bld.prependLongRaw(nc); bld.prependLongRaw(l) }
-      val nodeVec = bld.endVector(nodes.length)
-      val varVec =
-        if (varCounts.isEmpty) 0
-        else {
-          bld.startVector(8, varCounts.length, 8)
-          varCounts.reverse.foreach(bld.prependLongRaw)
-          bld.endVector(varCounts.length)
-        }
-      bld.startTable(5)
-      bld.slotLong(0, rows.toLong)
-      bld.slotUOffset(1, nodeVec)
-      bld.slotUOffset(2, bufVec)
-      bld.slotUOffset(3, compOff)
-      bld.slotUOffset(4, varVec)
-      bld.endTable()
-    }, bodyBytes.length.toLong)
-
-    val out = new java.io.ByteArrayOutputStream()
-    frame(out, meta)
-    out.write(bodyBytes)
-    out.toByteArray
-  }
-
-  private def schemaMessage(schema: ASchema): Array[Byte] = {
-    val meta = messageBytes(HSchema, bld => writeSchemaTable(bld, schema), 0L)
-    val out = new java.io.ByteArrayOutputStream()
-    frame(out, meta)
-    out.toByteArray
-  }
-
-  /** Encode a FILE-format payload. `batches` = (columns, rowCount)
-    * in raw-value representation (the reader's output shape). */
-  def encodeFile(schema: ASchema, batches: Seq[(Array[Array[Any]], Int)], codec: Int = -1): Array[Byte] =
-    guarded("file encode") {
-      val out = new java.io.ByteArrayOutputStream()
-      out.write(Magic); out.write(0); out.write(0)
-      out.write(schemaMessage(schema))
-      val blocks = batches.map { case (cols, rows) =>
-        val off = out.size.toLong
-        val msg = encodeBatch(schema, cols, rows, codec)
-        out.write(msg)
-        // metaDataLength = framing prefix (8) + padded metadata
-        val metaLen = i32(msg, 4) + 8
-        Block(off, metaLen, msg.length.toLong - metaLen)
-      }
-      out.write(Array[Byte](-1, -1, -1, -1, 0, 0, 0, 0)) // EOS
-      val bld = new FbBuilder(512)
-      val schemaOff = writeSchemaTable(bld, schema)
-      bld.startVector(24, blocks.length, 8)
-      blocks.reverse.foreach { b =>
-        bld.prependLongRaw(b.bodyLen)
-        bld.putInt(0) // struct padding
-        bld.putInt(b.metaLen)
-        bld.prependLongRaw(b.offset)
-      }
-      val rbVec = bld.endVector(blocks.length)
-      bld.startTable(5)
-      bld.slotShort(0, 4) // V5
-      bld.slotUOffset(1, schemaOff)
-      bld.slotUOffset(3, rbVec)
-      val fb = bld.finish(bld.endTable())
-      out.write(fb)
-      out.write(Array[Byte](fb.length.toByte, (fb.length >> 8).toByte, (fb.length >> 16).toByte, (fb.length >> 24).toByte))
-      out.write(Magic)
-      out.toByteArray
-    }
-
-  /** Encode a STREAM-format payload (schema + batches + EOS). */
-  def encodeStream(schema: ASchema, batches: Seq[(Array[Array[Any]], Int)], codec: Int = -1): Array[Byte] =
-    guarded("stream encode") {
-      val out = new java.io.ByteArrayOutputStream()
-      out.write(schemaMessage(schema))
-      batches.foreach { case (cols, rows) => out.write(encodeBatch(schema, cols, rows, codec)) }
-      out.write(Array[Byte](-1, -1, -1, -1, 0, 0, 0, 0))
-      out.toByteArray
-    }
-
   // ------------------------------------------------------------ oracle lane
 
   /** q_arrow: per (event_type, shard) bucket, the bucket's events
-    * round-trip through a REAL Arrow file — written by Arrow Java
-    * (the reference producer, on the Spark classpath), split into
-    * multiple record batches, then decoded by OUR ranged reader
-    * (footer walk, flatbuffers parse, buffer decode; requires verify
-    * every row) — plus a require-only compressed lane (our writer,
-    * ZSTD buffers, our reader) over a 64-row prefix. Aggregates are
-    * closed-form so DuckDB recomputes them independently.
+    * round-trip through a REAL Arrow file — built vector by vector with
+    * arrow-java (the reference producer), split into multiple record
+    * batches, then read back through the Spark face (footer, per-batch
+    * ranged loads, cell readers; requires verify every row) — plus
+    * require-only sub-lanes through our row writer and reader: a
+    * ZSTD-compressed id column, a map column and a run-end-encoded
+    * column over a 64-row prefix. Aggregates are closed-form so DuckDB
+    * recomputes them independently.
     *
     * Scale shape: buckets are `event_id DIV 4096` — task count grows
     * with data (SF-invariant per-task work), the q_cdx/q_zip rule. */
@@ -1873,83 +647,48 @@ object ArrowIpc {
       val sorted = ids.sorted.toArray
       val bytes = buildWithArrowJava(sorted)
       val (schema, batches) = readFileBytes(bytes)
-      req(schema.fields.map(_.name) == Seq("id", "tag", "val", "flag"), "arrow lane: schema drift")
+      req(schema.getFields.asScala.map(_.getName) == Seq("id", "tag", "val", "flag"), "arrow lane: schema drift")
       var i = 0
       var chars = 0L
       var valSum = 0L
-      batches.foreach { b =>
-        var r = 0
-        while (r < b.rows) {
-          val id = b.columns(0)(r).asInstanceOf[Long]
-          require(id == sorted(i), s"arrow lane: id drift at $i")
-          val tag = b.columns(1)(r).asInstanceOf[String]
-          require(tag == s"t${id % 101}", s"arrow lane: tag drift for $id")
-          val v = b.columns(2)(r).asInstanceOf[Double]
-          require(v == (id % 7).toDouble, s"arrow lane: val drift for $id")
-          require(b.columns(3)(r).asInstanceOf[Boolean] == (id % 3 == 0), s"arrow lane: flag drift for $id")
-          chars += tag.length
-          valSum += (id % 7)
-          i += 1
-          r += 1
-        }
+      batches.iterator.flatten.foreach { r =>
+        val id = r.getLong(0)
+        require(id == sorted(i), s"arrow lane: id drift at $i")
+        val tag = r.getString(1)
+        require(tag == s"t${id % 101}", s"arrow lane: tag drift for $id")
+        val v = r.getDouble(2)
+        require(v == (id % 7).toDouble, s"arrow lane: val drift for $id")
+        require(r.getBoolean(3) == (id % 3 == 0), s"arrow lane: flag drift for $id")
+        chars += tag.length
+        valSum += (id % 7)
+        i += 1
       }
       require(i == sorted.length, s"arrow lane: row count drift $i/${sorted.length}")
-      // require-only compressed lane: our writer (ZSTD) -> our reader
       if (sorted.nonEmpty) {
         val k = math.min(64, sorted.length)
-        val lane = ASchema(Seq(AField("id", nullable = false, AInt(64, signed = true))))
-        val cols: Array[Array[Any]] = Array(sorted.take(k).map(x => java.lang.Long.valueOf(x): Any))
-        val enc = encodeFile(lane, Seq((cols, k)), codec = 1)
-        val (_, back) = readFileBytes(enc)
-        require(back.map(_.rows).sum == k, "arrow lane: compressed row drift")
-        var j = 0
-        back.foreach { b2 =>
-          var r2 = 0
-          while (r2 < b2.rows) {
-            require(b2.columns(0)(r2).asInstanceOf[Long] == sorted(j), "arrow lane: compressed value drift")
-            j += 1; r2 += 1
-          }
-        }
+        val prefix = sorted.take(k).toSeq
+        def roundTrip(schema: Schema, value: Long => Any): Seq[Row] =
+          readFileBytes(writeBytes(schema, Seq(prefix.map(x => Row(value(x)))), codec = "zstd"))._2.flatten
+        // require-only compressed lane: our writer (ZSTD) -> our reader
+        val back = roundTrip(arrowSchema(StructType(Seq(StructField("id", LongType, nullable = false)))), x => x)
+        require(back.length == k, "arrow lane: compressed row drift")
+        back.zip(prefix).foreach { case (r, x) => require(r.getLong(0) == x, "arrow lane: compressed value drift") }
         // require-only map lane: map<utf8,int64> of {"id"-><id>, "mod"-><id%97>}
         // round-trips our writer (ZSTD) -> our reader entry-for-entry
-        val mapLane = ASchema(Seq(AField("m", nullable = false, AMap(keysSorted = false), Seq(
-          AField("entries", nullable = false, AStruct, Seq(
-            AField("key", nullable = false, AUtf8),
-            AField("value", nullable = true, AInt(64, signed = true))))))))
-        val mapCols: Array[Array[Any]] = Array(sorted.take(k).map(x =>
-          Vector(Vector[Any]("id", java.lang.Long.valueOf(x)), Vector[Any]("mod", java.lang.Long.valueOf(x % 97))): Any))
-        val mapEnc = encodeFile(mapLane, Seq((mapCols, k)), codec = 1)
-        val (_, mapBack) = readFileBytes(mapEnc)
-        require(mapBack.map(_.rows).sum == k, "arrow lane: map row drift")
-        var mj = 0
-        mapBack.foreach { b2 =>
-          var r2 = 0
-          while (r2 < b2.rows) {
-            val entries = b2.columns(0)(r2).asInstanceOf[Seq[Any]].map(_.asInstanceOf[Seq[Any]])
-            require(entries.length == 2 &&
-              entries(0) == Vector[Any]("id", sorted(mj)) &&
-              entries(1) == Vector[Any]("mod", sorted(mj) % 97), "arrow lane: map entry drift")
-            mj += 1; r2 += 1
-          }
+        val mapBack = roundTrip(arrowSchema(StructType(Seq(StructField("m", MapType(StringType, LongType), nullable = false)))),
+          x => Map("id" -> x, "mod" -> x % 97))
+        require(mapBack.length == k, "arrow lane: map row drift")
+        mapBack.zip(prefix).foreach { case (r, x) =>
+          require(r.getMap[String, Long](0) == Map("id" -> x, "mod" -> x % 97), "arrow lane: map entry drift")
         }
         // require-only REE lane: run-end-encoded (id DIV 16) — naturally
         // runny over the sorted bucket — round-trips writer (ZSTD) ->
         // reader with the runs expanded back element-for-element
-        val reeLane = ASchema(Seq(AField("r", nullable = false, ARee, Seq(
-          AField("run_ends", nullable = false, AInt(32, signed = true)),
-          AField("values", nullable = false, AInt(64, signed = true))))))
-        val reeCols: Array[Array[Any]] = Array(sorted.take(k).map(x => java.lang.Long.valueOf(x / 16): Any))
-        val reeEnc = encodeFile(reeLane, Seq((reeCols, k)), codec = 1)
-        val (_, reeBack) = readFileBytes(reeEnc)
-        require(reeBack.map(_.rows).sum == k, "arrow lane: ree row drift")
-        var rj = 0
-        reeBack.foreach { b2 =>
-          var r2 = 0
-          while (r2 < b2.rows) {
-            require(b2.columns(0)(r2).asInstanceOf[Long] == sorted(rj) / 16, "arrow lane: ree value drift")
-            rj += 1; r2 += 1
-          }
-        }
+        val reeLane = new Schema(java.util.List.of(new Field("r", FieldType.notNullable(ArrowType.RunEndEncoded.INSTANCE),
+          java.util.List.of(Field.notNullable("run_ends", new ArrowType.Int(32, true)), Field.notNullable("values", new ArrowType.Int(64, true))))))
+        val reeBack = roundTrip(reeLane, _ / 16)
+        require(reeBack.length == k, "arrow lane: ree row drift")
+        reeBack.zip(prefix).foreach { case (r, x) => require(r.getLong(0) == x / 16, "arrow lane: ree value drift") }
       }
       Seq(sorted.length.toLong, chars, valSum)
     }
@@ -1966,49 +705,38 @@ object ArrowIpc {
       .orderBy($"event_type")
   }
 
-  /** Build the lane file with Arrow Java — the conforming reference
-    * producer — in 512-row record batches. */
+  /** Build the lane file with arrow-java's vectors directly — the
+    * reference producer — in 512-row record batches. */
   private[graft] def buildWithArrowJava(ids: Array[Long]): Array[Byte] = {
-    import org.apache.arrow.vector._
-    import org.apache.arrow.vector.types.pojo.{ArrowType, Field, Schema => JSchema}
-    val alloc = new org.apache.arrow.memory.RootAllocator()
-    try {
-      val schema = new JSchema(java.util.Arrays.asList(
-        Field.notNullable("id", new ArrowType.Int(64, true)),
-        Field.nullable("tag", ArrowType.Utf8.INSTANCE),
-        Field.nullable("val", new ArrowType.FloatingPoint(org.apache.arrow.vector.types.FloatingPointPrecision.DOUBLE)),
-        Field.nullable("flag", ArrowType.Bool.INSTANCE)))
-      val root = VectorSchemaRoot.create(schema, alloc)
-      try {
+    val schema = new Schema(java.util.Arrays.asList(
+      Field.notNullable("id", new ArrowType.Int(64, true)),
+      Field.nullable("tag", ArrowType.Utf8.INSTANCE),
+      Field.nullable("val", new ArrowType.FloatingPoint(FloatingPointPrecision.DOUBLE)),
+      Field.nullable("flag", ArrowType.Bool.INSTANCE)))
+    Using.resource(new RootAllocator()) { alloc =>
+      Using.resource(VectorSchemaRoot.create(schema, alloc)) { root =>
         val bos = new java.io.ByteArrayOutputStream()
-        val w = new org.apache.arrow.vector.ipc.ArrowFileWriter(
-          root, null, java.nio.channels.Channels.newChannel(bos))
+        val w = new ArrowFileWriter(root, null, java.nio.channels.Channels.newChannel(bos))
         w.start()
         val idV = root.getVector("id").asInstanceOf[BigIntVector]
         val tagV = root.getVector("tag").asInstanceOf[VarCharVector]
         val valV = root.getVector("val").asInstanceOf[Float8Vector]
         val flagV = root.getVector("flag").asInstanceOf[BitVector]
-        var p = 0
-        while (p < ids.length || (p == 0 && ids.isEmpty)) {
-          val m = math.min(512, ids.length - p)
+        (if (ids.isEmpty) Iterator(ids) else ids.grouped(512)).foreach { part =>
           root.allocateNew()
-          var r = 0
-          while (r < m) {
-            val id = ids(p + r)
+          part.indices.foreach { r =>
+            val id = part(r)
             idV.setSafe(r, id)
-            tagV.setSafe(r, s"t${id % 101}".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+            tagV.setSafe(r, s"t${id % 101}".getBytes(UTF_8))
             valV.setSafe(r, (id % 7).toDouble)
             flagV.setSafe(r, if (id % 3 == 0) 1 else 0)
-            r += 1
           }
-          root.setRowCount(m)
+          root.setRowCount(part.length)
           w.writeBatch()
-          p += m
-          if (ids.isEmpty) p = 1 // single empty batch then exit
         }
-        w.end(); w.close()
+        w.close()
         bos.toByteArray
-      } finally root.close()
-    } finally alloc.close()
+      }
+    }
   }
 }

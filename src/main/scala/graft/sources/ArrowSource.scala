@@ -16,21 +16,25 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Spark-first shape: schema comes from the file FOOTER (tail-only
   * driver reads), one InputPartition per record-batch block (the
   * format's own parallelism unit — a 10k-batch shard fans out to 10k
-  * independently fetchable tasks), and COLUMN PRUNING is pushed into
-  * the decoder ([[ArrowIpc.decodeBatchMessage]]'s `wanted` overload):
-  * a pruned column's buffers are never materialized — on compressed
-  * files its LZ4/ZSTD work is skipped entirely, which
-  * ArrowSourceSpec proves by poisoning a pruned column's compressed
-  * buffer and reading successfully around it.
+  * independently fetchable tasks), and COLUMN PRUNING is pushed below
+  * the decoder ([[ArrowIpc.IpcFile.rows]]): a pruned column's buffers
+  * never reach arrow-java's loader, so on compressed files its
+  * LZ4/ZSTD work is skipped entirely, which ArrowSourceSpec proves by
+  * poisoning a pruned column's compressed buffer and reading
+  * successfully around it.
   *
   * Writes are shard-per-partition (`part-NNNNN.arrow`, the
-  * HuggingFace-datasets shard shape), task-committed via tmp-rename
-  * so failed attempts never surface; `option("codec", "zstd"|"lz4")`
-  * compresses bodies through the in-tree codecs; SaveMode.Overwrite
-  * maps to SupportsTruncate.
+  * HuggingFace-datasets shard shape), streamed in 4096-row record
+  * batches through arrow-java's file writer and task-committed via
+  * tmp-rename so failed attempts never surface; `option("codec",
+  * "zstd"|"lz4")` compresses bodies through arrow-compression;
+  * SaveMode.Overwrite maps to SupportsTruncate.
   *
-  * Scope: the FILE format (`.arrow`, Feather v2). Streams
-  * (`.arrows`) have no index and stay on [[ArrowIpc.readStreamBytes]].
+  * Scope: the FILE format (`.arrow`, Feather v2). Streams (`.arrows`)
+  * have no index and stay on [[ArrowIpc.readStreamBytes]]. Spark
+  * instantiates every registered source on each `format(...)` lookup,
+  * so this class names no arrow-java type: arrow-java loads only when
+  * an Arrow table is actually read or written.
   */
 final class ArrowSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "arrowipc"
@@ -54,11 +58,8 @@ final class ArrowSource extends TableProvider with DataSourceRegister {
     expanded
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val ps = paths(options)
-    val f = ArrowSource.footerOf(ps.head)
-    ArrowIpc.sparkSchema(f.schema)
-  }
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    ArrowIpc.open(paths(options).head)(_.face)
 
   override def getTable(
       schema: StructType,
@@ -70,38 +71,21 @@ final class ArrowSource extends TableProvider with DataSourceRegister {
     val rawPath = Option(opts.get("path"))
     val expanded = try paths(opts)
     catch { case _: IllegalArgumentException if rawPath.isDefined => Seq.empty }
-    new ArrowTable(expanded, rawPath, schema,
-      Option(opts.get("codec")).map(ArrowTable.codecOf).getOrElse(-1))
+    new ArrowTable(expanded, rawPath, schema, Option(opts.get("codec")).getOrElse("none"))
   }
 
   override def supportsExternalMetadata(): Boolean = true
-}
-
-private[sources] object ArrowSource {
-  def footerOf(path: String): ArrowIpc.Footer = {
-    val raf = new java.io.RandomAccessFile(path, "r")
-    try ArrowIpc.footer(ArrowIpc.rangedOf(raf), raf.length())
-    finally raf.close()
-  }
-}
-
-private object ArrowTable {
-  def codecOf(name: String): Int = name.toLowerCase match {
-    case "none" | "" => -1
-    case "lz4" => 0
-    case "zstd" => 1
-    case other => throw new IllegalArgumentException(s"arrowipc: unknown codec '$other' (none|lz4|zstd)")
-  }
 }
 
 private final class ArrowTable(
     paths: Seq[String],
     rawPath: Option[String],
     tableSchema: StructType,
-    writeCodec: Int)
+    writeCodec: String)
     extends Table
     with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
+  ArrowIpc.codecOf(writeCodec) // an unknown codec refuses at plan time
   override def name(): String = {
     val p = paths.headOption.orElse(rawPath).getOrElse("?")
     s"arrowipc($p${if (paths.length > 1) s" +${paths.length - 1}" else ""})"
@@ -140,7 +124,7 @@ private final class ArrowScan(paths: Seq[String], required: StructType) extends 
   override def planInputPartitions(): Array[InputPartition] =
     paths.flatMap { p =>
       // driver cost: one footer (tail) read per file — never batch data
-      ArrowSource.footerOf(p).batches.indices.map(i => ArrowBatchPartition(p, i))
+      (0 until ArrowIpc.open(p)(_.batches)).map(i => ArrowBatchPartition(p, i))
     }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -157,46 +141,14 @@ private final class ArrowReaderFactory(required: StructType) extends PartitionRe
 private final class ArrowPartitionReader(path: String, batchIdx: Int, required: StructType)
     extends PartitionReader[InternalRow] {
 
-  private val rows: Iterator[InternalRow] = {
-    val raf = new java.io.RandomAccessFile(path, "r")
-    try {
-      val ranged = ArrowIpc.rangedOf(raf)
-      val f = ArrowIpc.footer(ranged, raf.length())
-      val wantedNames = required.fieldNames.toSet
-      val fieldIdx = f.schema.fields.zipWithIndex.filter { case (fld, _) => wantedNames.contains(fld.name) }
-      require(fieldIdx.length == required.length, s"arrowipc: schema drift in $path")
-      val wanted = fieldIdx.map(_._2).toSet
-      // dictionaries referenced anywhere in a WANTED field's subtree
-      // must decode; others are skipped by id BEFORE any body (or
-      // codec) work — pruning applies to dictionaries too
-      val neededDictIds =
-        fieldIdx.map(_._1).flatMap(ArrowIpc.flatten).filter(_.dictId >= 0).map(_.dictId).toSet
-      val dicts = f.dictionaries.flatMap { blk =>
-        val head = ranged(blk.offset, blk.metaLen)
-        val id = ArrowIpc.dictionaryIdOf(head, 0)
-        if (!neededDictIds.contains(id)) None
-        else {
-          // body only — the metadata bytes were already read
-          val body = ranged(blk.offset + blk.metaLen, blk.bodyLen.toInt)
-          Some(ArrowIpc.decodeDictionaryMessage(head ++ body, 0, f.schema))
-        }
-      }.toMap
-      val blk = f.batches(batchIdx)
-      val msg = ranged(blk.offset, (blk.metaLen.toLong + blk.bodyLen).toInt)
-      val batch = ArrowIpc.decodeBatchMessage(msg, 0, f.schema, dicts, wanted.contains)
-      // required-order column views
-      val byName = f.schema.fields.map(_.name).zipWithIndex.toMap
-      val cols = required.fieldNames.map(n => byName(n))
-      val aFields = cols.map(c => f.schema.fields(c))
-      val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToCatalystConverter(required)
-      (0 until batch.rows).iterator.map { r =>
-        val vals = cols.indices.map { k =>
-          ArrowIpc.toRowValue(aFields(k), batch.columns(cols(k))(r))
-        }
-        toCatalyst(Row.fromSeq(vals)).asInstanceOf[InternalRow]
-      }.toVector.iterator
-    } finally raf.close()
+  private val rows: Iterator[InternalRow] = ArrowIpc.open(path) { f =>
+    val names = f.face.fieldNames
+    val wanted = names.indices.filter(i => required.fieldNames.contains(names(i)))
+    require(wanted.length == required.length, s"arrowipc: schema drift in $path")
+    // rows come back in schema order; the scan hands them out in required order
+    val order = required.fieldNames.map(n => wanted.indexWhere(names(_) == n))
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(required)
+    f.rows(batchIdx, wanted).iterator.map(r => toCatalyst(Row.fromSeq(order.map(r.get))).asInstanceOf[InternalRow])
   }
 
   private var current: InternalRow = _
@@ -207,73 +159,7 @@ private final class ArrowPartitionReader(path: String, batchIdx: Int, required: 
 
 // --------------------------------------------------------------- write side
 
-private object ArrowWriteSupport {
-  /** Spark type -> Arrow field (the writer matrix; unsupported types
-    * refuse loudly at plan time, not per task). */
-  def toAField(f: org.apache.spark.sql.types.StructField): ArrowIpc.AField = {
-    import org.apache.spark.sql.types._
-    val tpe: (ArrowIpc.AType, Seq[ArrowIpc.AField]) = f.dataType match {
-      case ByteType => (ArrowIpc.AInt(8, signed = true), Nil)
-      case ShortType => (ArrowIpc.AInt(16, signed = true), Nil)
-      case IntegerType => (ArrowIpc.AInt(32, signed = true), Nil)
-      case LongType => (ArrowIpc.AInt(64, signed = true), Nil)
-      case FloatType => (ArrowIpc.AFloat(1), Nil)
-      case DoubleType => (ArrowIpc.AFloat(2), Nil)
-      case StringType => (ArrowIpc.AUtf8, Nil)
-      case BinaryType => (ArrowIpc.ABinary, Nil)
-      case BooleanType => (ArrowIpc.ABool, Nil)
-      case d: DecimalType if d.precision == 20 && d.scale == 0 =>
-        (ArrowIpc.AInt(64, signed = false), Nil) // the u64 carrier round-trips
-      case DateType => (ArrowIpc.ADate(0), Nil)
-      case TimestampType => (ArrowIpc.ATimestamp(2, "UTC"), Nil)
-      case ArrayType(et, nullable) =>
-        (ArrowIpc.AList, Seq(toAField(StructField("item", et, nullable))))
-      case st: StructType => (ArrowIpc.AStruct, st.fields.toSeq.map(toAField))
-      case MapType(kt, vt, vcn) =>
-        (ArrowIpc.AMap(keysSorted = false), Seq(ArrowIpc.AField("entries", nullable = false, ArrowIpc.AStruct,
-          Seq(toAField(StructField("key", kt, nullable = false)), toAField(StructField("value", vt, vcn))))))
-      case dt => throw new IllegalArgumentException(s"arrowipc write: unsupported type $dt for '${f.name}'")
-    }
-    ArrowIpc.AField(f.name, f.nullable, tpe._1, tpe._2)
-  }
-
-  /** Spark external value -> ArrowIpc raw writer value. */
-  def toRaw(dt: org.apache.spark.sql.types.DataType, v: Any): Any = {
-    import org.apache.spark.sql.types._
-    if (v == null) null
-    else dt match {
-      case DateType =>
-        v match {
-          case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
-          case d: java.time.LocalDate => d.toEpochDay.toInt
-        }
-      case TimestampType =>
-        v match {
-          case t: java.sql.Timestamp =>
-            // Spark's fromJavaTimestamp formula — getTime already
-            // carries the sub-second millis (and floors correctly for
-            // pre-epoch instants); only the sub-milli remainder of
-            // getNanos may be added on top
-            t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-          case t: java.time.Instant => t.getEpochSecond * 1000000L + t.getNano / 1000L
-        }
-      case d: DecimalType if d.precision == 20 && d.scale == 0 =>
-        val big = v.asInstanceOf[java.math.BigDecimal].toBigIntegerExact
-        require(big.signum >= 0 && big.bitLength <= 64, s"arrowipc write: $big outside uint64")
-        java.lang.Long.valueOf(big.longValue) // raw two's-complement low 64 bits
-      case ArrayType(et, _) => v.asInstanceOf[scala.collection.Seq[Any]].toVector.map(e => toRaw(et, e))
-      case st: StructType =>
-        val r = v.asInstanceOf[Row]
-        st.fields.toIndexedSeq.zipWithIndex.map { case (f, i) => toRaw(f.dataType, r.get(i)) }
-      case MapType(kt, vt, _) =>
-        v.asInstanceOf[scala.collection.Map[Any, Any]].toVector
-          .map { case (k, mv) => Vector(toRaw(kt, k), toRaw(vt, mv)) }
-      case _ => v
-    }
-  }
-}
-
-private final class ArrowWriteBuilder(dir: String, schema: StructType, codec: Int)
+private final class ArrowWriteBuilder(dir: String, schema: StructType, codec: String)
     extends org.apache.spark.sql.connector.write.WriteBuilder
     with org.apache.spark.sql.connector.write.SupportsTruncate {
   private var doTruncate = false
@@ -282,7 +168,7 @@ private final class ArrowWriteBuilder(dir: String, schema: StructType, codec: In
     val t = doTruncate
     new org.apache.spark.sql.connector.write.Write {
       // validate the schema at plan time
-      schema.fields.foreach(ArrowWriteSupport.toAField)
+      ArrowIpc.arrowSchema(schema)
       override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
         new ArrowBatchWrite(dir, schema, codec, t)
     }
@@ -292,7 +178,7 @@ private final class ArrowWriteBuilder(dir: String, schema: StructType, codec: In
 private final case class ArrowCommitMessage(tmp: String, dst: String)
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
-private final class ArrowBatchWrite(dir: String, schema: StructType, codec: Int, truncate: Boolean)
+private final class ArrowBatchWrite(dir: String, schema: StructType, codec: String, truncate: Boolean)
     extends org.apache.spark.sql.connector.write.BatchWrite {
   override def createBatchWriterFactory(
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo): org.apache.spark.sql.connector.write.DataWriterFactory = {
@@ -317,48 +203,43 @@ private final class ArrowBatchWrite(dir: String, schema: StructType, codec: Int,
     }
 }
 
-private final class ArrowWriterFactory(dir: String, schema: StructType, codec: Int)
+private final class ArrowWriterFactory(dir: String, schema: StructType, codec: String)
     extends org.apache.spark.sql.connector.write.DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
     new ArrowDataWriter(dir, schema, codec, partitionId, taskId)
 }
 
-/** Buffers the partition's rows column-wise, encodes 4096-row record
-  * batches, writes `part-NNNNN.arrow.tmp`, and hands the rename to
-  * the driver-side commit (task-attempt isolation: the tmp name
-  * carries the task id, so a zombie attempt never clobbers the
-  * committed file). */
-private final class ArrowDataWriter(dir: String, schema: StructType, codec: Int, partitionId: Int, taskId: Long)
+/** Streams the partition's rows into `part-NNNNN.arrow.tmp` in
+  * 4096-row record batches and hands the rename to the driver-side
+  * commit (task-attempt isolation: the tmp name carries the task id,
+  * so a zombie attempt never clobbers the committed file). */
+private final class ArrowDataWriter(dir: String, schema: StructType, codec: String, partitionId: Int, taskId: Long)
     extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
 
   private val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
     .createToScalaConverter(schema)
-  private val aFields = schema.fields.toIndexedSeq.map(ArrowWriteSupport.toAField)
-  private val aSchema = ArrowIpc.ASchema(aFields)
-  private val cols = Array.fill(schema.length)(scala.collection.mutable.ArrayBuffer.empty[Any])
+  private val dst = f"$dir/part-$partitionId%05d.arrow"
+  private val tmp = s"$dst.$taskId.tmp"
+  private val out = {
+    import java.nio.file.StandardOpenOption._
+    new ArrowIpc.Writer(java.nio.channels.FileChannel.open(java.nio.file.Paths.get(tmp), CREATE, WRITE, TRUNCATE_EXISTING),
+      ArrowIpc.arrowSchema(schema), codec, file = true)
+  }
+  private val pending = scala.collection.mutable.ArrayBuffer.empty[Row]
 
   override def write(record: InternalRow): Unit = {
-    val row = toScala(record).asInstanceOf[Row]
-    var i = 0
-    while (i < schema.length) {
-      cols(i) += ArrowWriteSupport.toRaw(schema.fields(i).dataType, row.get(i))
-      i += 1
-    }
+    pending += toScala(record).asInstanceOf[Row]
+    if (pending.length == 4096) flush()
   }
 
+  private def flush(): Unit = { out.batch(pending.toSeq); pending.clear() }
+
   override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    val n = cols.headOption.map(_.length).getOrElse(0)
-    val batches = (0 until n by 4096).map { start =>
-      val m = math.min(4096, n - start)
-      (Array.tabulate(schema.length)(c => cols(c).slice(start, start + m).toArray), m)
-    }
-    val bytes = ArrowIpc.encodeFile(aSchema, if (n == 0) Nil else batches, codec)
-    val dst = f"$dir/part-$partitionId%05d.arrow"
-    val tmp = s"$dst.$taskId.tmp"
-    java.nio.file.Files.write(java.nio.file.Paths.get(tmp), bytes)
+    if (pending.nonEmpty) flush()
+    out.close()
     ArrowCommitMessage(tmp, dst)
   }
 
-  override def abort(): Unit = ()
-  override def close(): Unit = ()
+  override def abort(): Unit = { out.close(); new java.io.File(tmp).delete() }
+  override def close(): Unit = out.close()
 }

@@ -1,24 +1,26 @@
 package graft
 
+import graft.ArrowKit._
 import graft.sources.ArrowIpc
 import graft.sources.ArrowIpc._
+import org.apache.arrow.vector.types.pojo.{ArrowType, Field}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Arrow IPC conformance — LIVE against the reference implementation:
-  * Arrow Java ships on the Spark classpath, so every run cross-checks
-  * BOTH directions (our reader over ArrowFileWriter/ArrowStreamWriter
-  * output — scalar matrix, nulls, multi-batch, dictionary, lz4/zstd
-  * body compression; Arrow Java's readers over our writer's output,
-  * incl. nested types and both codecs via arrow-compression).
-  * Cross-ecosystem pyarrow fixtures are pinned in
-  * ArrowFixtureSpec. */
+/** The in-tree Arrow layer around arrow-java: the Spark face over
+  * ArrowFileWriter/ArrowStreamWriter output (scalar matrix, nulls,
+  * multi-batch, dictionary, lz4/zstd bodies), the Spark-row writer read
+  * back by arrow-java's readers (nested types, both codecs), the ranged
+  * footer read, and the hostile-input contract. Cross-ecosystem pyarrow
+  * fixtures are pinned in ArrowFixtureSpec. */
 class ArrowIpcSpec extends AnyFunSuite {
 
   private val Utf8 = java.nio.charset.StandardCharsets.UTF_8
 
   private def alloc() = new org.apache.arrow.memory.RootAllocator()
 
-  // ------------------------------------------------------- direction 1: Java writer -> our reader
+  // ------------------------------------------------------- Arrow Java writer -> our reader
 
   test("scalar matrix: Arrow Java file writer -> our reader (values, nulls, multi-batch)") {
     import org.apache.arrow.vector._
@@ -88,40 +90,38 @@ class ArrowIpcSpec extends AnyFunSuite {
         val bytes = bos.toByteArray
 
         val (as, batches) = ArrowIpc.readFileBytes(bytes)
-        assert(as.fields.map(_.name) == Seq("i8", "i16", "i32", "i64", "u8", "u16", "u32", "f4", "f8",
+        assert(names(as) == Seq("i8", "i16", "i32", "i64", "u8", "u16", "u32", "f4", "f8",
           "b", "s", "bin", "fsb", "dec", "d32", "d64", "ts", "t64", "dur"))
-        assert(as.fields(4).tpe == AInt(8, signed = false))
-        assert(as.fields(16).tpe == ATimestamp(2, "UTC"))
-        assert(batches.map(_.rows) == Seq(6, 0, 5))
-        val col = as.fields.map(_.name).zipWithIndex.toMap
+        assert(as.getFields.get(4).getType == new ArrowType.Int(8, false))
+        assert(as.getFields.get(16).getType == new ArrowType.Timestamp(JTimeUnit.MICROSECOND, "UTC"))
+        assert(batches.map(_.length) == Seq(6, 0, 5))
+        val col = names(as).zipWithIndex.toMap
         var i = 0
-        batches.foreach { bt =>
-          for (r <- 0 until bt.rows) {
-            def g(n: String): Any = bt.columns(col(n))(r)
-            if (i % 4 == 3) assert(as.fields.indices.forall(c => bt.columns(c)(r) == null), s"row $i should be all-null")
-            else {
-              assert(g("i8") == (i * 13 - 40).toByte)
-              assert(g("i16") == (i * 1001 - 4000).toShort)
-              assert(g("i32") == i * 100000 - 350000)
-              assert(g("i64") == i * 123456789L - 400000000L)
-              assert(g("u8") == ((i * 29) % 256).toShort)
-              assert(g("u16") == (i * 7001) % 65536)
-              assert(g("u32") == (i.toLong * 900000007L) % 4294967296L)
-              assert(g("f4") == i * 1.5f - 3f)
-              assert(g("f8") == i * 2.25 - 9.0)
-              assert(g("b") == (i % 2 == 1))
-              assert(g("s") == s"s${i * i}é")
-              assert(java.util.Arrays.equals(g("bin").asInstanceOf[Array[Byte]], Array.tabulate(i % 4)(j => (i * 7 + j).toByte)))
-              assert(java.util.Arrays.equals(g("fsb").asInstanceOf[Array[Byte]], Array.fill(5)(i.toByte)))
-              assert(g("dec") == new java.math.BigDecimal(java.math.BigInteger.valueOf((i - 4) * 1234567L), 3))
-              assert(g("d32") == 19000 + i)
-              assert(g("d64") == (19000L + i) * 86400000L + i)
-              assert(g("ts") == 1700000000000000L + i)
-              assert(g("t64") == i * 1000001L)
-              assert(g("dur") == i * 777L)
-            }
-            i += 1
+        flat(batches).foreach { row =>
+          def g(n: String): Any = row.get(col(n))
+          if (i % 4 == 3) assert(row.toSeq.forall(_ == null), s"row $i should be all-null")
+          else {
+            assert(g("i8") == (i * 13 - 40).toByte)
+            assert(g("i16") == (i * 1001 - 4000).toShort)
+            assert(g("i32") == i * 100000 - 350000)
+            assert(g("i64") == i * 123456789L - 400000000L)
+            assert(g("u8") == ((i * 29) % 256).toShort)
+            assert(g("u16") == (i * 7001) % 65536)
+            assert(g("u32") == (i.toLong * 900000007L) % 4294967296L)
+            assert(g("f4") == i * 1.5f - 3f)
+            assert(g("f8") == i * 2.25 - 9.0)
+            assert(g("b") == (i % 2 == 1))
+            assert(g("s") == s"s${i * i}é")
+            assert(java.util.Arrays.equals(g("bin").asInstanceOf[Array[Byte]], Array.tabulate(i % 4)(j => (i * 7 + j).toByte)))
+            assert(java.util.Arrays.equals(g("fsb").asInstanceOf[Array[Byte]], Array.fill(5)(i.toByte)))
+            assert(g("dec") == new java.math.BigDecimal(java.math.BigInteger.valueOf((i - 4) * 1234567L), 3))
+            assert(g("d32") == java.time.LocalDate.ofEpochDay(19000L + i))
+            assert(g("d64") == java.time.LocalDate.ofEpochDay(19000L + i)) // ms past midnight floor to the day
+            assert(g("ts") == java.time.Instant.ofEpochSecond(1700000000L, i * 1000L))
+            assert(g("t64") == i * 1000001L)
+            assert(g("dur") == i * 777L)
           }
+          i += 1
         }
         assert(i == 11)
       } finally root.close()
@@ -147,8 +147,8 @@ class ArrowIpcSpec extends AnyFunSuite {
         val w = new org.apache.arrow.vector.ipc.ArrowFileWriter(root, null, java.nio.channels.Channels.newChannel(bos))
         w.start(); w.writeBatch(); w.end(); w.close()
         val (as, batches) = ArrowIpc.readFileBytes(bos.toByteArray)
-        assert(ArrowIpc.sparkType(as.fields.head) == org.apache.spark.sql.types.DecimalType(20, 0))
-        val c = batches.head.columns(0)
+        assert(ArrowIpc.sparkType(as.getFields.get(0)) == DecimalType(20, 0))
+        val c = batches.head.map(_.get(0))
         assert(c(0) == java.math.BigDecimal.valueOf(7L))
         assert(c(1) == new java.math.BigDecimal(Long.MaxValue))
         assert(c(2) == new java.math.BigDecimal(java.math.BigInteger.ONE.shiftLeft(64).subtract(java.math.BigInteger.ONE)))
@@ -184,18 +184,19 @@ class ArrowIpcSpec extends AnyFunSuite {
       val w = new org.apache.arrow.vector.ipc.ArrowFileWriter(root, provider, java.nio.channels.Channels.newChannel(bos))
       w.start(); w.writeBatch(); w.end(); w.close()
       val (as, batches) = ArrowIpc.readFileBytes(bos.toByteArray)
-      assert(as.fields.head.dictId == 42L && as.fields.head.dictIndexBits == 16)
-      assert(as.fields.head.tpe == AUtf8)
-      assert(batches.head.rows == n)
+      val f = as.getFields.get(0)
+      assert(f.getDictionary.getId == 42L && f.getDictionary.getIndexType == new ArrowType.Int(16, true))
+      assert(f.getType == ArrowType.Utf8.INSTANCE)
+      assert(batches.head.length == n)
       for (i <- 0 until n) {
-        val v = batches.head.columns(0)(i)
+        val v = batches.head(i).get(0)
         if (i % 5 == 4) assert(v == null) else assert(v == words(i % words.length))
       }
       raw.close(); encoded.close(); dictV.close(); root.close()
     } finally a.close()
   }
 
-  test("body compression: Arrow Java lz4/zstd writers -> our reader (in-tree codecs)") {
+  test("body compression: Arrow Java lz4/zstd writers -> our reader (arrow-compression)") {
     import org.apache.arrow.vector._
     import org.apache.arrow.compression.CommonsCompressionFactory
     import org.apache.arrow.vector.compression.CompressionUtil
@@ -221,10 +222,10 @@ class ArrowIpcSpec extends AnyFunSuite {
             CommonsCompressionFactory.INSTANCE, codec)
           w.start(); w.writeBatch(); w.end(); w.close()
           val (_, batches) = ArrowIpc.readFileBytes(bos.toByteArray)
-          assert(batches.head.rows == n)
+          assert(batches.head.length == n)
           for (i <- 0 until n) {
-            assert(batches.head.columns(0)(i) == i % 97L)
-            assert(batches.head.columns(1)(i) == s"w${i % 83}")
+            assert(batches.head(i).get(0) == i % 97L)
+            assert(batches.head(i).get(1) == s"w${i % 83}")
           }
         } finally root.close()
       } finally a.close()
@@ -251,39 +252,36 @@ class ArrowIpcSpec extends AnyFunSuite {
         }
         w.end(); w.close()
         val (as, batches) = ArrowIpc.readStreamBytes(bos.toByteArray)
-        assert(as.fields.map(_.name) == Seq("x"))
-        assert(batches.map(_.rows) == Seq(4, 4, 4))
-        assert(batches(2).columns(0)(3) == 203)
+        assert(names(as) == Seq("x"))
+        assert(batches.map(_.length) == Seq(4, 4, 4))
+        assert(batches(2)(3).get(0) == 203)
       } finally root.close()
     } finally a.close()
   }
 
-  // ------------------------------------------------------- direction 2: our writer -> Arrow Java reader
+  // ------------------------------------------------------- our writer -> Arrow Java reader
 
-  private def laneSchema = ASchema(Seq(
-    AField("id", nullable = true, AInt(64, signed = true)),
-    AField("name", nullable = true, AUtf8),
-    AField("score", nullable = true, AFloat(2)),
-    AField("ok", nullable = true, ABool),
-    AField("raw", nullable = true, ABinary),
-    AField("emb", nullable = true, AFixedSizeList(3), Seq(AField("item", nullable = false, AFloat(1)))),
-    AField("hist", nullable = true, AList, Seq(AField("item", nullable = true, AInt(64, signed = true)))),
-    AField("pos", nullable = true, AStruct, Seq(
-      AField("x", nullable = true, AInt(32, signed = true)),
-      AField("y", nullable = true, AUtf8)))))
+  private val laneStruct = StructType(Seq(
+    StructField("id", LongType),
+    StructField("name", StringType),
+    StructField("score", DoubleType),
+    StructField("ok", BooleanType),
+    StructField("raw", BinaryType),
+    StructField("emb", ArrayType(FloatType, containsNull = false)),
+    StructField("hist", ArrayType(LongType)),
+    StructField("pos", StructType(Seq(StructField("x", IntegerType), StructField("y", StringType))))))
+  private def laneSchema = ArrowIpc.arrowSchema(laneStruct)
 
-  private def laneColumns(n: Int): Array[Array[Any]] = {
-    def id(i: Int): Any = if (i % 7 == 6) null else java.lang.Long.valueOf(i * 37L - 100L)
-    Array(
-      Array.tabulate[Any](n)(id),
-      Array.tabulate[Any](n)(i => if (i % 5 == 4) null else s"n${i}·${i % 11}"),
-      Array.tabulate[Any](n)(i => if (i % 9 == 8) null else java.lang.Double.valueOf(i * 0.625 - 2.0)),
-      Array.tabulate[Any](n)(i => if (i % 4 == 2) null else java.lang.Boolean.valueOf(i % 3 == 0)),
-      Array.tabulate[Any](n)(i => if (i % 6 == 5) null else Array.tabulate((i % 5))(j => (i + j).toByte)),
-      Array.tabulate[Any](n)(i => if (i % 8 == 7) null else Vector[Any](
-        java.lang.Float.valueOf(i * 1f), java.lang.Float.valueOf(i * 2f), java.lang.Float.valueOf(i * 3f))),
-      Array.tabulate[Any](n)(i => if (i % 10 == 9) null else Vector.tabulate[Any](i % 4)(j => java.lang.Long.valueOf(i * 10L + j))),
-      Array.tabulate[Any](n)(i => if (i % 11 == 10) null else Vector[Any](java.lang.Integer.valueOf(i), s"y$i")))
+  private def laneRows(n: Int): Seq[Row] = (0 until n).map { i =>
+    Row(
+      if (i % 7 == 6) null else i * 37L - 100L,
+      if (i % 5 == 4) null else s"n${i}·${i % 11}",
+      if (i % 9 == 8) null else i * 0.625 - 2.0,
+      if (i % 4 == 2) null else i % 3 == 0,
+      if (i % 6 == 5) null else Array.tabulate((i % 5))(j => (i + j).toByte),
+      if (i % 8 == 7) null else Seq(i * 1f, i * 2f, i * 3f),
+      if (i % 10 == 9) null else Seq.tabulate(i % 4)(j => i * 10L + j),
+      if (i % 11 == 10) null else Row(i, s"y$i"))
   }
 
   test("our file writer (none/lz4/zstd) -> Arrow Java file reader, values equal") {
@@ -291,11 +289,11 @@ class ArrowIpcSpec extends AnyFunSuite {
     import org.apache.arrow.vector.util.ByteArrayReadableSeekableByteChannel
     import org.apache.arrow.compression.CommonsCompressionFactory
     val n = 300
-    for (codec <- Seq(-1, 0, 1)) {
-      val bytes = ArrowIpc.encodeFile(laneSchema, Seq((laneColumns(n), n)), codec)
+    for (codec <- Seq("none", "lz4", "zstd")) {
+      val bytes = ArrowIpc.writeBytes(laneSchema, Seq(laneRows(n)), codec)
       // our own reader first (round-trip)
       val (_, back) = ArrowIpc.readFileBytes(bytes)
-      assert(back.head.rows == n)
+      assert(back.head.length == n)
       val a = alloc()
       try {
         val r = new ArrowFileReader(
@@ -304,31 +302,32 @@ class ArrowIpcSpec extends AnyFunSuite {
           assert(r.loadNextBatch(), s"codec=$codec: Arrow Java rejects our file")
           val root = r.getVectorSchemaRoot
           assert(root.getRowCount == n)
-          val cols = laneColumns(n)
+          val rows = laneRows(n)
           for (i <- 0 until n) {
             def jv(name: String): AnyRef = root.getVector(name).getObject(i)
-            if (cols(0)(i) == null) assert(jv("id") == null) else assert(jv("id") == cols(0)(i))
-            if (cols(1)(i) == null) assert(jv("name") == null) else assert(jv("name").toString == cols(1)(i))
-            if (cols(2)(i) == null) assert(jv("score") == null) else assert(jv("score") == cols(2)(i))
-            if (cols(3)(i) == null) assert(jv("ok") == null) else assert(jv("ok") == cols(3)(i))
-            if (cols(4)(i) == null) assert(jv("raw") == null)
-            else assert(java.util.Arrays.equals(jv("raw").asInstanceOf[Array[Byte]], cols(4)(i).asInstanceOf[Array[Byte]]))
-            if (cols(5)(i) == null) assert(jv("emb") == null)
+            val row = rows(i)
+            if (row.isNullAt(0)) assert(jv("id") == null) else assert(jv("id") == row.get(0))
+            if (row.isNullAt(1)) assert(jv("name") == null) else assert(jv("name").toString == row.get(1))
+            if (row.isNullAt(2)) assert(jv("score") == null) else assert(jv("score") == row.get(2))
+            if (row.isNullAt(3)) assert(jv("ok") == null) else assert(jv("ok") == row.get(3))
+            if (row.isNullAt(4)) assert(jv("raw") == null)
+            else assert(java.util.Arrays.equals(jv("raw").asInstanceOf[Array[Byte]], row.getAs[Array[Byte]](4)))
+            if (row.isNullAt(5)) assert(jv("emb") == null)
             else {
               val l = jv("emb").asInstanceOf[java.util.List[_]]
-              assert(l.size == 3 && (0 until 3).forall(j => l.get(j) == cols(5)(i).asInstanceOf[Vector[Any]](j)))
+              assert(l.size == 3 && (0 until 3).forall(j => l.get(j) == row.getSeq[Float](5)(j)))
             }
-            if (cols(6)(i) == null) assert(jv("hist") == null)
+            if (row.isNullAt(6)) assert(jv("hist") == null)
             else {
-              val exp = cols(6)(i).asInstanceOf[Vector[Any]]
+              val exp = row.getSeq[Long](6)
               val l = jv("hist").asInstanceOf[java.util.List[_]]
               assert(l.size == exp.length && exp.indices.forall(j => l.get(j) == exp(j)))
             }
-            if (cols(7)(i) == null) assert(jv("pos") == null)
+            if (row.isNullAt(7)) assert(jv("pos") == null)
             else {
               val m = jv("pos").asInstanceOf[java.util.Map[String, AnyRef]]
-              assert(m.get("x") == cols(7)(i).asInstanceOf[Vector[Any]](0))
-              assert(m.get("y").toString == cols(7)(i).asInstanceOf[Vector[Any]](1))
+              assert(m.get("x") == row.getStruct(7).get(0))
+              assert(m.get("y").toString == row.getStruct(7).get(1))
             }
           }
         } finally r.close()
@@ -339,10 +338,9 @@ class ArrowIpcSpec extends AnyFunSuite {
   test("our stream writer -> Arrow Java stream reader; our reader round-trips the same bytes") {
     import org.apache.arrow.vector.ipc.ArrowStreamReader
     val n = 64
-    val schema = ASchema(Seq(AField("x", nullable = true, AInt(64, signed = true))))
-    def col(b: Int): Array[Array[Any]] =
-      Array(Array.tabulate[Any](n)(i => java.lang.Long.valueOf(b * 1000L + i)))
-    val bytes = ArrowIpc.encodeStream(schema, Seq((col(0), n), (col(1), n)), codec = -1)
+    val schema = ArrowIpc.arrowSchema(StructType(Seq(StructField("x", LongType))))
+    def batch(b: Int): Seq[Row] = Seq.tabulate(n)(i => Row(b * 1000L + i))
+    val bytes = ArrowIpc.writeBytes(schema, Seq(batch(0), batch(1)), file = false)
     val a = alloc()
     try {
       val r = new ArrowStreamReader(new java.io.ByteArrayInputStream(bytes), a)
@@ -358,23 +356,28 @@ class ArrowIpcSpec extends AnyFunSuite {
       } finally r.close()
     } finally a.close()
     val (_, back) = ArrowIpc.readStreamBytes(bytes)
-    assert(back.map(_.rows) == Seq(n, n))
-    assert(back(1).columns(0)(63) == 1063L)
+    assert(back.map(_.length) == Seq(n, n))
+    assert(back(1)(63).get(0) == 1063L)
   }
 
   // ------------------------------------------------------------ scale shape
 
   test("ranged-read audit: footer parse touches only the head magic and the file tail") {
     val n = 2000
-    val bytes = ArrowIpc.encodeFile(laneSchema, Seq((laneColumns(n), n)), codec = -1)
+    val bytes = ArrowIpc.writeBytes(laneSchema, Seq(laneRows(n)))
     val len = bytes.length.toLong
     val reads = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
-    val ranged: (Long, Int) => Array[Byte] = (off, sz) => {
-      reads += ((off, sz))
-      java.util.Arrays.copyOfRange(bytes, off.toInt, off.toInt + sz)
+    // a recording channel: every read's position and length
+    val ch = new org.apache.arrow.vector.util.ByteArrayReadableSeekableByteChannel(bytes) {
+      override def read(dst: java.nio.ByteBuffer): Int = {
+        val at = position()
+        val got = super.read(dst)
+        reads += ((at, got))
+        got
+      }
     }
-    val f = ArrowIpc.footer(ranged, len)
-    assert(f.batches.nonEmpty)
+    val f = new ArrowIpc.IpcFile(ch).footer
+    assert(f.getRecordBatches.size > 0)
     val footerLen = {
       val tail = java.util.Arrays.copyOfRange(bytes, bytes.length - 10, bytes.length - 6)
       (tail(0) & 0xff) | ((tail(1) & 0xff) << 8) | ((tail(2) & 0xff) << 16) | ((tail(3) & 0xff) << 24)
@@ -398,8 +401,9 @@ class ArrowIpcSpec extends AnyFunSuite {
       val p1 = dir.resolve("a.arrow"); val p2 = dir.resolve("b.arrow")
       java.nio.file.Files.write(p1, bytes)
       java.nio.file.Files.write(p2, bytes)
-      val df = ArrowIpc.scan(TestSpark.spark, Seq(p1.toString, p2.toString))
+      val df = TestSpark.spark.read.format("arrowipc").load(p1.toString, p2.toString)
       assert(df.schema.fieldNames.toSeq == Seq("id", "tag", "val", "flag"))
+      assert(df.rdd.getNumPartitions == 6) // one ranged task per 512-row batch
       assert(df.count() == 3000)
       val got = df.selectExpr("sum(id)", "sum(length(tag))", "sum(val)").collect().head
       assert(got.getLong(0) == 2L * ids.sum)
@@ -414,7 +418,7 @@ class ArrowIpcSpec extends AnyFunSuite {
 
   test("malformed input raises ArrowError, never raw index errors") {
     val n = 40
-    val good = ArrowIpc.encodeFile(laneSchema, Seq((laneColumns(n), n)), codec = 1)
+    val good = ArrowIpc.writeBytes(laneSchema, Seq(laneRows(n)), "zstd")
     def mustFail(b: Array[Byte], what: String): Unit = {
       val r = try { ArrowIpc.readFileBytes(b); None }
       catch {
@@ -434,7 +438,7 @@ class ArrowIpcSpec extends AnyFunSuite {
     hugeFooter(good.length - 7) = 0x7f.toByte
     mustFail(hugeFooter, "oversized footer length")
     // stream: garbage after valid schema message
-    val stream = ArrowIpc.encodeStream(laneSchema, Seq((laneColumns(4), 4)), codec = -1)
+    val stream = ArrowIpc.writeBytes(laneSchema, Seq(laneRows(4)), file = false)
     val cut = stream.dropRight(9)
     val r = try { ArrowIpc.readStreamBytes(cut); true }
     catch { case _: ArrowIpc.ArrowError => true; case e: Throwable => fail(s"stream cut escaped: $e") }
@@ -443,7 +447,7 @@ class ArrowIpcSpec extends AnyFunSuite {
 
   test("mutation fuzz: decode equal bytes-or-ArrowError only (no CRC in the format, so values may drift)") {
     val n = 96
-    val base = ArrowIpc.encodeFile(laneSchema, Seq((laneColumns(n), n)), codec = 0)
+    val base = ArrowIpc.writeBytes(laneSchema, Seq(laneRows(n)), "lz4")
     val rnd = new scala.util.Random(20260816L)
     var mutated = 0
     for (_ <- 0 until 600) {
@@ -471,14 +475,14 @@ class ArrowIpcSpec extends AnyFunSuite {
   }
 
   test("allocation bombs: declared rows without backing bytes refuse before allocating") {
-    // A 23-byte body cannot legitimately carry 100M rows: with nulls
-    // the validity bitmap must be full-size, without them the data
-    // buffer must be. Craft by patching a valid 4-row file's
-    // RecordBatch length field (node lengths live in the metadata
-    // flatbuffer as i64 pairs; scan-and-patch both occurrences).
-    val schema = ASchema(Seq(AField("x", nullable = true, AInt(64, signed = true))))
-    val cols: Array[Array[Any]] = Array(Array[Any](1L, 2L, null, 4L))
-    val good = ArrowIpc.encodeFile(schema, Seq((cols, 4)), codec = -1)
+    // A few bytes of body cannot legitimately carry 100M rows: loading
+    // them means sizing buffers for 100M values, which the read's
+    // length-derived allocator limit refuses. Craft by patching a
+    // valid 4-row file's RecordBatch length field (node lengths live
+    // in the metadata flatbuffer as i64 pairs; scan-and-patch both
+    // occurrences).
+    val schema = ArrowIpc.arrowSchema(StructType(Seq(StructField("x", LongType))))
+    val good = ArrowIpc.writeBytes(schema, Seq(Seq(Row(1L), Row(2L), Row(null), Row(4L))))
     // patch every little-endian i64 equal to 4 in the batch message
     // region to 100,000,000 (rows + node length + null-count stays)
     val bomb = good.clone()
@@ -493,9 +497,12 @@ class ArrowIpcSpec extends AnyFunSuite {
     }
     assert(patched >= 2, s"expected to patch rows+node length, got $patched")
     val before = Runtime.getRuntime.totalMemory() - Runtime.getRuntime.freeMemory()
+    def causes(t: Throwable): Seq[Throwable] = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
     try { ArrowIpc.readFileBytes(bomb); fail("bomb decoded silently") }
     catch {
-      case _: ArrowIpc.ArrowError => ()
+      case e: ArrowIpc.ArrowError =>
+        assert(causes(e).exists(_.isInstanceOf[org.apache.arrow.memory.OutOfMemoryException]),
+          s"expected the allocator limit to refuse, got $e")
       case e: org.scalatest.exceptions.TestFailedException => throw e
       case e: Throwable => fail(s"bomb escaped as ${e.getClass.getName}: ${e.getMessage}")
     }
@@ -504,21 +511,19 @@ class ArrowIpcSpec extends AnyFunSuite {
   }
 
   test("writer refusals: dictionary fields and unsupported types refuse loudly") {
-    val dictField = ASchema(Seq(AField("w", nullable = true, AUtf8, dictId = 3L)))
-    intercept[ArrowIpc.ArrowError] {
-      ArrowIpc.encodeFile(dictField, Seq((Array(Array[Any]("a")), 1)))
-    }
-    val dec = ASchema(Seq(AField("d", nullable = true, ADecimal(10, 2, 128))))
-    intercept[ArrowIpc.ArrowError] {
-      ArrowIpc.encodeFile(dec, Seq((Array(Array[Any](java.math.BigDecimal.ONE)), 1)))
-    }
+    val dictField = schema(new Field("w", new org.apache.arrow.vector.types.pojo.FieldType(true, ArrowType.Utf8.INSTANCE,
+      new org.apache.arrow.vector.types.pojo.DictionaryEncoding(3L, false, null)), null))
+    intercept[ArrowIpc.ArrowError] { ArrowIpc.writeBytes(dictField, Seq(Seq(Row("a")))) }
+    val dec = schema(field("d", nullable = true, new ArrowType.Decimal(10, 2, 128)))
+    intercept[ArrowIpc.ArrowError] { ArrowIpc.writeBytes(dec, Seq(Seq(Row(java.math.BigDecimal.ONE)))) }
+    intercept[ArrowIpc.ArrowError] { ArrowIpc.arrowSchema(StructType(Seq(StructField("d", DecimalType(10, 2))))) }
   }
 
   test("empty file (zero batches) round-trips both ways") {
-    val schema = ASchema(Seq(AField("x", nullable = true, AInt(64, signed = true))))
-    val bytes = ArrowIpc.encodeFile(schema, Nil)
+    val schema = ArrowIpc.arrowSchema(StructType(Seq(StructField("x", LongType))))
+    val bytes = ArrowIpc.writeBytes(schema, Nil)
     val (as, batches) = ArrowIpc.readFileBytes(bytes)
-    assert(as == schema.copy(fields = schema.fields) && batches.isEmpty)
+    assert(as.getFields == schema.getFields && batches.isEmpty)
     import org.apache.arrow.vector.ipc.ArrowFileReader
     import org.apache.arrow.vector.util.ByteArrayReadableSeekableByteChannel
     val a = alloc()

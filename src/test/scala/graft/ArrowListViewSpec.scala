@@ -1,7 +1,9 @@
 package graft
 
+import graft.ArrowKit._
 import graft.sources.ArrowIpc
-import graft.sources.ArrowIpc._
+import org.apache.arrow.vector.types.pojo.ArrowType
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Arrow ListView / LargeListView conformance. Producer/validator is
@@ -9,23 +11,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * including genuinely OVERLAPPING and out-of-order views, which the
   * dense List layout cannot express and which prove the reader honors
   * the offsets+sizes semantics rather than assuming monotonic
-  * offsets. Our writer emits the canonical dense form, which Arrow
-  * Java reads back logically. */
+  * offsets. Our row writer emits the canonical dense form, which
+  * Arrow Java reads back logically. */
 class ArrowListViewSpec extends AnyFunSuite {
 
   private def alloc() = new org.apache.arrow.memory.RootAllocator()
-
-  private def cols(batches: Seq[Batch]): Array[Vector[Any]] = {
-    val n = batches.map(_.columns.length).max
-    Array.tabulate(n)(c => batches.flatMap(_.columns(c)).toVector)
-  }
 
   // child data [10,20,30,40,50,60]; views: overlapping + out of order
   private val childData = Array(10, 20, 30, 40, 50, 60)
   private val views = Vector[(Int, Int)]((2, 3), (0, 5), (-1, -1) /* null */, (4, 0), (1, 4))
   private val expected: Vector[Any] = views.map {
     case (-1, -1) => null
-    case (o, s) => childData.slice(o, o + s).map(java.lang.Integer.valueOf).toVector
+    case (o, s) => childData.slice(o, o + s).toVector
   }
 
   /** Arrow Java builds a list-view column with raw offsets/sizes. */
@@ -69,39 +66,35 @@ class ArrowListViewSpec extends AnyFunSuite {
 
   test("Arrow Java list-view with OVERLAPPING + out-of-order views decodes") {
     val (schema, batches) = ArrowIpc.readFileBytes(javaListViewFile())
-    assert(schema.fields.head.tpe == AListView(wide = false))
-    val c = cols(batches)
-    for (i <- views.indices) assert(c(0)(i) == expected(i), s"lv[$i]: got ${c(0)(i)}")
+    assert(schema.getFields.get(0).getType == ArrowType.ListView.INSTANCE)
+    val rows = flat(batches)
+    for (i <- views.indices) assert(rows(i).get(0) == expected(i), s"lv[$i]: got ${rows(i).get(0)}")
   }
 
   // ----------------------------------------------------------- our writer
 
-  private def lvSchema(wide: Boolean) = ASchema(Seq(
-    AField("lv", nullable = true, AListView(wide),
-      Seq(AField("item", nullable = true, AInt(32, signed = true)))),
-    AField("k", nullable = false, AInt(32, signed = true))))
+  private def lvSchema(wide: Boolean) = ArrowKit.schema(
+    field("lv", nullable = true, if (wide) ArrowType.LargeListView.INSTANCE else ArrowType.ListView.INSTANCE,
+      field("item", nullable = true, new ArrowType.Int(32, true))),
+    field("k", nullable = false, new ArrowType.Int(32, true)))
 
-  private def lvColumns(n: Int): Array[Array[Any]] = Array(
-    Array.tabulate[Any](n)(i =>
-      if (i % 7 == 3) null
-      else Vector.tabulate(i % 5)(j => java.lang.Integer.valueOf(i * 10 + j))),
-    Array.tabulate[Any](n)(i => java.lang.Integer.valueOf(i)))
+  private def lvList(i: Int): Seq[Int] = if (i % 7 == 3) null else Seq.tabulate(i % 5)(j => i * 10 + j)
+  private def lvRows(n: Int): Seq[Row] = (0 until n).map(i => Row(lvList(i), i))
 
   test("round-trip: our dense list-view writer -> our reader, both widths, all codecs") {
-    for (wide <- Seq(false, true); codec <- Seq(-1, 0, 1)) {
-      val bytes = ArrowIpc.encodeFile(lvSchema(wide), Seq((lvColumns(23), 23)), codec)
+    for (wide <- Seq(false, true); codec <- Seq("none", "lz4", "zstd")) {
+      val bytes = ArrowIpc.writeBytes(lvSchema(wide), Seq(lvRows(23)), codec)
       val (schema, batches) = ArrowIpc.readFileBytes(bytes)
-      assert(schema.fields.head.tpe == AListView(wide))
-      val c = cols(batches)
-      val exp = lvColumns(23)(0)
-      for (i <- 0 until 23) assert(c(0)(i) == exp(i), s"wide=$wide codec=$codec lv[$i]")
+      assert(schema.getFields.get(0).getType == lvSchema(wide).getFields.get(0).getType)
+      val rows = flat(batches)
+      for (i <- 0 until 23) assert(rows(i).get(0) == lvList(i), s"wide=$wide codec=$codec lv[$i]")
     }
   }
 
   test("our writer -> Arrow Java reader, logical lists equal") {
     import org.apache.arrow.vector.ipc.ArrowFileReader
     import org.apache.arrow.vector.util.ByteArrayReadableSeekableByteChannel
-    val bytes = ArrowIpc.encodeFile(lvSchema(wide = false), Seq((lvColumns(23), 23)))
+    val bytes = ArrowIpc.writeBytes(lvSchema(wide = false), Seq(lvRows(23)))
     val a = alloc()
     try {
       val r = new ArrowFileReader(new ByteArrayReadableSeekableByteChannel(bytes), a)
@@ -109,14 +102,13 @@ class ArrowListViewSpec extends AnyFunSuite {
         assert(r.loadNextBatch(), "Arrow Java rejects our list-view file")
         val root = r.getVectorSchemaRoot
         val lv = root.getVector("lv")
-        val exp = lvColumns(23)(0)
         for (i <- 0 until 23) {
-          if (exp(i) == null) assert(lv.isNull(i), s"lv[$i] should be null")
+          val exp = lvList(i)
+          if (exp == null) assert(lv.isNull(i), s"lv[$i] should be null")
           else {
             val got = lv.getObject(i).asInstanceOf[java.util.List[_]]
-            assert(got.size == exp(i).asInstanceOf[Vector[_]].length, s"lv[$i] size")
-            for (j <- 0 until got.size)
-              assert(got.get(j) == exp(i).asInstanceOf[Vector[Any]](j), s"lv[$i][$j]")
+            assert(got.size == exp.length, s"lv[$i] size")
+            for (j <- 0 until got.size) assert(got.get(j) == exp(j), s"lv[$i][$j]")
           }
         }
       } finally r.close()
@@ -134,9 +126,9 @@ class ArrowListViewSpec extends AnyFunSuite {
       val rows = df.collect().sortBy(_.getInt(1))
       for (i <- views.indices) {
         if (expected(i) == null) assert(rows(i).isNullAt(0), s"row $i")
-        else assert(rows(i).getSeq[Int](0) == expected(i).asInstanceOf[Vector[Integer]].map(_.intValue), s"row $i")
+        else assert(rows(i).getSeq[Int](0) == expected(i), s"row $i")
       }
-      // pruned: skip path consumes 3 buffers + child without decoding
+      // pruned: the list-view's 3 buffers + child never reach the loader
       assert(df.select("k").collect().map(_.getInt(0)).sorted.toSeq == views.indices.toSeq)
     } finally {
       dir.listFiles().foreach(_.delete()); dir.delete()
@@ -144,14 +136,6 @@ class ArrowListViewSpec extends AnyFunSuite {
   }
 
   test("hostility: byte-flip fuzz over a list-view file raises ArrowError or decodes") {
-    val good = ArrowIpc.encodeFile(lvSchema(wide = false), Seq((lvColumns(23), 23)))
-    val rnd = new scala.util.Random(184)
-    for (_ <- 0 until 400) {
-      val mutated = good.clone()
-      val at = rnd.nextInt(mutated.length)
-      mutated(at) = (mutated(at) ^ (1 + rnd.nextInt(255))).toByte
-      try { ArrowIpc.readFileBytes(mutated); () }
-      catch { case _: ArrowError => () }
-    }
+    flipFuzz(ArrowIpc.writeBytes(lvSchema(wide = false), Seq(lvRows(23))), seed = 184)
   }
 }

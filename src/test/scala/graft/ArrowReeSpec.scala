@@ -1,7 +1,11 @@
 package graft
 
+import graft.ArrowKit._
 import graft.sources.ArrowIpc
 import graft.sources.ArrowIpc._
+import org.apache.arrow.vector.types.FloatingPointPrecision
+import org.apache.arrow.vector.types.pojo.ArrowType
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Arrow run-end-encoded (REE) conformance.
@@ -9,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Producer/validator is LIVE Arrow Java (RunEndEncodedVector ships
   * in arrow-vector 18.3 on the Spark classpath): Arrow Java builds
   * REE files our reader decodes, and Arrow Java's ArrowFileReader
-  * reads our writer's bytes back logically. pyarrow 16.1 cannot be
+  * reads our row writer's run-length-compressed bytes back logically. pyarrow 16.1 cannot be
   * the producer here — its RunEndEncodedArray.from_arrays binding is
   * broken in-container (NOTES_r18 probe), which is why this lane's
   * cross-ecosystem check is Java-only. */
@@ -25,11 +29,6 @@ class ArrowReeSpec extends AnyFunSuite {
   private def expected(i: Int): java.lang.Long = {
     val j = runEnds.indexWhere(_ > i)
     runValue(j)
-  }
-
-  private def cols(batches: Seq[Batch]): Array[Vector[Any]] = {
-    val n = batches.map(_.columns.length).max
-    Array.tabulate(n)(c => batches.flatMap(_.columns(c)).toVector)
   }
 
   // ---------------------------------------------- Arrow Java as producer
@@ -78,37 +77,36 @@ class ArrowReeSpec extends AnyFunSuite {
 
   test("Arrow Java REE file decodes: runs expand to the values type, nulls ride null runs") {
     val (schema, batches) = ArrowIpc.readFileBytes(javaReeFile())
-    val r = schema.fields.head
-    assert(r.tpe == ARee, s"got ${r.tpe}")
-    assert(r.children.map(_.name) == Seq("run_ends", "values"))
-    val c = cols(batches)
-    assert(c(0).length == 37)
+    val r = schema.getFields.get(0)
+    assert(r.getType == ArrowType.RunEndEncoded.INSTANCE, s"got ${r.getType}")
+    assert(r.getChildren.get(0).getName == "run_ends" && r.getChildren.get(1).getName == "values")
+    val rows = flat(batches)
+    assert(rows.length == 37)
     for (i <- 0 until 37) {
-      assert(c(0)(i) == expected(i), s"r[$i]: got ${c(0)(i)} want ${expected(i)}")
-      assert(c(1)(i) == i.toLong)
+      assert(rows(i).get(0) == expected(i), s"r[$i]: got ${rows(i).get(0)} want ${expected(i)}")
+      assert(rows(i).get(1) == i.toLong)
     }
   }
 
   // --------------------------------------------------------- our writer
 
-  private def reeSchema(valType: AType, valNullable: Boolean) = ASchema(Seq(
-    AField("r", nullable = false, ARee, Seq(
-      AField("run_ends", nullable = false, AInt(32, signed = true)),
-      AField("values", nullable = valNullable, valType))),
-    AField("k", nullable = false, AInt(64, signed = true))))
+  private def reeSchema(valType: ArrowType, valNullable: Boolean, endsType: ArrowType = new ArrowType.Int(32, true),
+      endsNullable: Boolean = false) = ArrowKit.schema(
+    field("r", nullable = false, ArrowType.RunEndEncoded.INSTANCE,
+      field("run_ends", endsNullable, endsType),
+      field("values", valNullable, valType)),
+    field("k", nullable = false, new ArrowType.Int(64, true)))
 
-  private def plainColumns(n: Int): Array[Array[Any]] = Array(
-    Array.tabulate[Any](n)(i => expected(i)),
-    Array.tabulate[Any](n)(i => java.lang.Long.valueOf(i.toLong)))
+  private val i64 = new ArrowType.Int(64, true)
+  private def plainRows(n: Int): Seq[Row] = (0 until n).map(i => Row(expected(i), i.toLong))
 
   test("round-trip: our writer run-length compresses, our reader expands — all codecs") {
-    for (codec <- Seq(-1, 0, 1)) {
-      val bytes = ArrowIpc.encodeFile(reeSchema(AInt(64, signed = true), valNullable = true),
-        Seq((plainColumns(37), 37)), codec)
+    for (codec <- Seq("none", "lz4", "zstd")) {
+      val bytes = ArrowIpc.writeBytes(reeSchema(i64, valNullable = true), Seq(plainRows(37)), codec)
       val (schema, batches) = ArrowIpc.readFileBytes(bytes)
-      assert(schema.fields.head.tpe == ARee)
-      val c = cols(batches)
-      for (i <- 0 until 37) assert(c(0)(i) == expected(i), s"codec=$codec r[$i]")
+      assert(schema.getFields.get(0).getType == ArrowType.RunEndEncoded.INSTANCE)
+      val rows = flat(batches)
+      for (i <- 0 until 37) assert(rows(i).get(0) == expected(i), s"codec=$codec r[$i]")
     }
   }
 
@@ -116,18 +114,17 @@ class ArrowReeSpec extends AnyFunSuite {
     val colVals = Array.tabulate[Any](37) { i =>
       val e = expected(i); if (e == null) null else s"s${e.longValue}"
     }
-    val bytes = ArrowIpc.encodeFile(reeSchema(AUtf8, valNullable = true),
-      Seq((Array(colVals, plainColumns(37)(1)), 37)))
+    val bytes = ArrowIpc.writeBytes(reeSchema(ArrowType.Utf8.INSTANCE, valNullable = true),
+      Seq((0 until 37).map(i => Row(colVals(i), i.toLong))))
     val (_, batches) = ArrowIpc.readFileBytes(bytes)
-    val c = cols(batches)
-    for (i <- 0 until 37) assert(c(0)(i) == colVals(i), s"r[$i]")
+    val rows = flat(batches)
+    for (i <- 0 until 37) assert(rows(i).get(0) == colVals(i), s"r[$i]")
   }
 
   test("our writer -> Arrow Java file reader, logical values equal") {
     import org.apache.arrow.vector.ipc.ArrowFileReader
     import org.apache.arrow.vector.util.ByteArrayReadableSeekableByteChannel
-    val bytes = ArrowIpc.encodeFile(reeSchema(AInt(64, signed = true), valNullable = true),
-      Seq((plainColumns(37), 37)))
+    val bytes = ArrowIpc.writeBytes(reeSchema(i64, valNullable = true), Seq(plainRows(37)))
     val a = alloc()
     try {
       val r = new ArrowFileReader(new ByteArrayReadableSeekableByteChannel(bytes), a)
@@ -152,8 +149,7 @@ class ArrowReeSpec extends AnyFunSuite {
 
   test("Spark face: REE column surfaces as its values type; scan() expands") {
     val spark = TestSpark.spark
-    val bytes = ArrowIpc.encodeFile(reeSchema(AInt(64, signed = true), valNullable = true),
-      Seq((plainColumns(37), 37)))
+    val bytes = ArrowIpc.writeBytes(reeSchema(i64, valNullable = true), Seq(plainRows(37)))
     val schema = ArrowIpc.readFileBytes(bytes)._1
     val st = ArrowIpc.sparkSchema(schema)
     assert(st.fields(0).dataType == org.apache.spark.sql.types.LongType)
@@ -171,7 +167,7 @@ class ArrowReeSpec extends AnyFunSuite {
         if (e == null) assert(rows(i).isNullAt(0), s"row $i")
         else assert(rows(i).getLong(0) == e.longValue, s"row $i")
       }
-      // pruned read skips the REE column entirely (skipColumn path)
+      // pruned read: the REE column's nodes and buffers never reach the loader
       val ks = df.select("k").collect().map(_.getLong(0)).sorted.toSeq
       assert(ks == (0L until 37L))
     } finally {
@@ -183,30 +179,15 @@ class ArrowReeSpec extends AnyFunSuite {
 
   test("hostility: malformed REE raises ArrowError, never raw errors") {
     // schema-level: nullable run_ends child must refuse at parse
-    val badSchema = ASchema(Seq(
-      AField("r", nullable = false, ARee, Seq(
-        AField("run_ends", nullable = true, AInt(32, signed = true)),
-        AField("values", nullable = true, AInt(64, signed = true))))))
-    val badBytes = ArrowIpc.encodeFile(badSchema, Seq((Array(plainColumns(2)(0)), 2)))
+    val badBytes = ArrowIpc.writeBytes(reeSchema(i64, valNullable = true, endsNullable = true), Seq(plainRows(2)))
     intercept[ArrowError] { ArrowIpc.readFileBytes(badBytes) }
     // float run_ends must refuse at parse
-    val floatEnds = ASchema(Seq(
-      AField("r", nullable = false, ARee, Seq(
-        AField("run_ends", nullable = false, AFloat(2)),
-        AField("values", nullable = true, AInt(64, signed = true))))))
     intercept[ArrowError] {
-      ArrowIpc.readFileBytes(ArrowIpc.encodeFile(floatEnds, Seq((Array(plainColumns(2)(0)), 2))))
+      ArrowIpc.readFileBytes(ArrowIpc.writeBytes(
+        reeSchema(i64, valNullable = true, endsType = new ArrowType.FloatingPoint(FloatingPointPrecision.DOUBLE)),
+        Seq(plainRows(2))))
     }
     // byte-flip fuzz over a valid REE file: equal-bytes or ArrowError
-    val good = ArrowIpc.encodeFile(reeSchema(AInt(64, signed = true), valNullable = true),
-      Seq((plainColumns(37), 37)))
-    val rnd = new scala.util.Random(182)
-    for (_ <- 0 until 400) {
-      val mutated = good.clone()
-      val at = rnd.nextInt(mutated.length)
-      mutated(at) = (mutated(at) ^ (1 + rnd.nextInt(255))).toByte
-      try { ArrowIpc.readFileBytes(mutated); () }
-      catch { case _: ArrowError => () }
-    }
+    flipFuzz(ArrowIpc.writeBytes(reeSchema(i64, valNullable = true), Seq(plainRows(37))), seed = 182)
   }
 }

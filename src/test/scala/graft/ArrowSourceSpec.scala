@@ -1,7 +1,10 @@
 package graft
 
 import graft.sources.ArrowIpc
-import graft.sources.ArrowIpc._
+import org.apache.arrow.vector.types.pojo.ArrowType
+import org.apache.arrow.vector.util.ByteArrayReadableSeekableByteChannel
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** DSv2 face: `spark.read.format("arrowipc")`. Pruning is proven to
@@ -14,22 +17,19 @@ class ArrowSourceSpec extends AnyFunSuite {
 
   /** `poison` is LAST so its data buffer is the final body buffer —
     * the poisoning test aims there. */
-  private def laneFile(n: Int, codec: Int): Array[Byte] = {
-    val schema = ASchema(Seq(
-      AField("keep", nullable = false, AInt(64, signed = true)),
-      AField("emb", nullable = true, AFixedSizeList(2), Seq(AField("item", nullable = false, AFloat(2)))),
-      AField("poison", nullable = true, AUtf8)))
-    val cols: Array[Array[Any]] = Array(
-      Array.tabulate[Any](n)(i => java.lang.Long.valueOf(i * 3L)),
-      Array.tabulate[Any](n)(i => Vector[Any](java.lang.Double.valueOf(i * 0.5), java.lang.Double.valueOf(i * 0.25))),
-      Array.tabulate[Any](n)(i => s"verbose-string-payload-$i-" + ("pad" * 40)))
-    ArrowIpc.encodeFile(schema, Seq((cols, n)), codec)
+  private def laneFile(n: Int, codec: String): Array[Byte] = {
+    val schema = ArrowIpc.arrowSchema(StructType(Seq(
+      StructField("keep", LongType, nullable = false),
+      StructField("emb", ArrayType(DoubleType, containsNull = false)),
+      StructField("poison", StringType))))
+    ArrowIpc.writeBytes(schema,
+      Seq((0 until n).map(i => Row(i * 3L, Seq(i * 0.5, i * 0.25), s"verbose-string-payload-$i-" + ("pad" * 40)))), codec)
   }
 
   test("load + full schema read over two files; values and count match") {
     val dir = java.nio.file.Files.createTempDirectory("arrowsrc")
     try {
-      val bytes = laneFile(500, codec = -1)
+      val bytes = laneFile(500, codec = "none")
       java.nio.file.Files.write(dir.resolve("a.arrow"), bytes)
       java.nio.file.Files.write(dir.resolve("b.arrow"), bytes)
       val df = spark.read.format("arrowipc").load(dir.toString) // dir expansion
@@ -47,7 +47,7 @@ class ArrowSourceSpec extends AnyFunSuite {
   test("column pruning reaches the scan (readSchema) and the plan") {
     val dir = java.nio.file.Files.createTempDirectory("arrowprune")
     try {
-      java.nio.file.Files.write(dir.resolve("a.arrow"), laneFile(200, codec = -1))
+      java.nio.file.Files.write(dir.resolve("a.arrow"), laneFile(200, codec = "none"))
       val df = spark.read.format("arrowipc").load(dir.resolve("a.arrow").toString).select("keep")
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("columns [keep]"), s"scan description not pruned:\n$plan")
@@ -59,7 +59,7 @@ class ArrowSourceSpec extends AnyFunSuite {
   }
 
   test("PROOF pruning skips decompression: poisoned pruned column reads fine, full read fails") {
-    val bytes = laneFile(800, codec = 1) // zstd, checksummed frames
+    val bytes = laneFile(800, codec = "zstd")
     // locate the footer; the last body buffer (poison's data, by far
     // the largest) ends just before the EOS marker that precedes it
     val fLen = {
@@ -215,7 +215,7 @@ class ArrowSourceSpec extends AnyFunSuite {
   }
 
   test("hostile footer: block extents outside the file refuse as ArrowError at plan time") {
-    val good = laneFile(50, codec = -1)
+    val good = laneFile(50, codec = "none")
     // patch the first batch Block's bodyLength (footer struct field at
     // offset+16) to a huge value: find the footer region and flip the
     // recordBatches vector's first entry — simpler: binary-search for
@@ -231,11 +231,7 @@ class ArrowSourceSpec extends AnyFunSuite {
     // try patching it to 2^40 and see that footer() REFUSES rather
     // than letting a fetch task blow up later; unpatchable positions
     // (schema bytes etc.) may still parse — we only need one refusal
-    val raf: (Array[Byte]) => Unit = { b =>
-      val ranged: (Long, Int) => Array[Byte] =
-        (off, n) => java.util.Arrays.copyOfRange(b, off.toInt, off.toInt + n)
-      ArrowIpc.footer(ranged, b.length.toLong); ()
-    }
+    val raf: (Array[Byte]) => Unit = { b => new ArrowIpc.IpcFile(new ByteArrayReadableSeekableByteChannel(b)).footer; () }
     for (p <- footerStart until good.length - 18) {
       val b = good.clone()
       b(p + 5) = 0x01 // push a high byte into some i64 in the footer
@@ -249,7 +245,7 @@ class ArrowSourceSpec extends AnyFunSuite {
   }
 
   test("hostile footer: Long-overflow block extents refuse at footer parse (not in fetch tasks)") {
-    val good = laneFile(20, codec = -1)
+    val good = laneFile(20, codec = "none")
     // locate the first record-batch Block struct in the footer by its
     // known offset value (the batch message starts right after the
     // schema message: 8 + 8 + paddedSchemaFbLen)
@@ -272,9 +268,7 @@ class ArrowSourceSpec extends AnyFunSuite {
     val bomb = good.clone()
     val huge = 0x7FFFFFFFFFFFFF00L
     for (j <- 0 until 8) bomb(pos + j) = ((huge >> (8 * j)) & 0xff).toByte
-    val ranged: (Long, Int) => Array[Byte] =
-      (off, n) => java.util.Arrays.copyOfRange(bomb, off.toInt, off.toInt + n)
-    intercept[ArrowIpc.ArrowError] { ArrowIpc.footer(ranged, bomb.length.toLong) }
+    intercept[ArrowIpc.ArrowError] { new ArrowIpc.IpcFile(new ByteArrayReadableSeekableByteChannel(bomb)).footer }
   }
 
   test("uint64 round-trip: decimal(20,0) carrier writes back as real arrow u64") {
@@ -291,7 +285,7 @@ class ArrowSourceSpec extends AnyFunSuite {
     val f = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".arrow")).head
     val bytes = java.nio.file.Files.readAllBytes(f.toPath)
     val (as, _) = ArrowIpc.readFileBytes(bytes)
-    assert(as.fields.head.tpe == AInt(64, signed = false))
+    assert(as.getFields.get(0).getType == new ArrowType.Int(64, false))
     val back = spark.read.format("arrowipc").load(dir)
     val got = back.collect().map(r => Option(r.getDecimal(0)).map(_.toBigInteger.toString).orNull).sorted(
       Ordering[String].on((s: String) => if (s == null) "" else s))
@@ -304,11 +298,9 @@ class ArrowSourceSpec extends AnyFunSuite {
     try {
       val p = dir.resolve("m.arrow")
       // our writer: 5 batches of 100
-      val schema = ASchema(Seq(AField("x", nullable = false, AInt(64, signed = true))))
-      val batches = (0 until 5).map { b =>
-        (Array(Array.tabulate[Any](100)(i => java.lang.Long.valueOf(b * 100L + i))), 100)
-      }
-      java.nio.file.Files.write(p, ArrowIpc.encodeFile(schema, batches))
+      val schema = ArrowIpc.arrowSchema(StructType(Seq(StructField("x", LongType, nullable = false))))
+      val batches = (0 until 5).map(b => Seq.tabulate(100)(i => Row(b * 100L + i)))
+      java.nio.file.Files.write(p, ArrowIpc.writeBytes(schema, batches))
       val df = spark.read.format("arrowipc").load(p.toString)
       assert(df.rdd.getNumPartitions == 5)
       assert(df.count() == 500)

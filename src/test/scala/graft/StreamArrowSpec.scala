@@ -1,8 +1,9 @@
 package graft
 
 import graft.sources.ArrowIpc
-import graft.sources.ArrowIpc._
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types._
 
 /** Streaming twin for Arrow shards: files dropped in a directory are
   * ingested continuously; file (.arrow) and stream (.arrows) framing
@@ -12,16 +13,13 @@ class StreamArrowSpec extends SparkSuite {
   test("arrow shard landing zone: streamed rows equal the batch decode, both framings") {
     val dir = java.nio.file.Files.createTempDirectory("arrowstream")
     try {
-      val schema = ASchema(Seq(
-        AField("id", nullable = false, AInt(64, signed = true)),
-        AField("tag", nullable = true, AUtf8)))
-      def cols(from: Int, n: Int): Array[Array[Any]] = Array(
-        Array.tabulate[Any](n)(i => java.lang.Long.valueOf(from + i.toLong)),
-        Array.tabulate[Any](n)(i => s"t${(from + i) % 7}"))
-      // one FILE-format shard (our writer), one STREAM-format shard,
-      // one Arrow-Java-written file shard
-      java.nio.file.Files.write(dir.resolve("a.arrow"), ArrowIpc.encodeFile(schema, Seq((cols(0, 40), 40)), codec = 1))
-      java.nio.file.Files.write(dir.resolve("b.arrows"), ArrowIpc.encodeStream(schema, Seq((cols(40, 25), 25))))
+      val schema = ArrowIpc.arrowSchema(StructType(Seq(
+        StructField("id", LongType, nullable = false),
+        StructField("tag", StringType))))
+      def rows(from: Int, n: Int): Seq[Row] = (from until from + n).map(i => Row(i.toLong, s"t${i % 7}"))
+      // one FILE-format shard and one STREAM-format shard
+      java.nio.file.Files.write(dir.resolve("a.arrow"), ArrowIpc.writeBytes(schema, Seq(rows(0, 40)), "zstd"))
+      java.nio.file.Files.write(dir.resolve("b.arrows"), ArrowIpc.writeBytes(schema, Seq(rows(40, 25)), file = false))
       val sparkSchemaExp = ArrowIpc.sparkSchema(schema)
       val q = ArrowIpc.rowsStream(spark, dir.toString, sparkSchemaExp)
         .writeStream.format("memory").queryName("arrow_stream_test")

@@ -20,64 +20,6 @@ class WindowsSpec extends SparkSuite {
     }
   }
 
-  test("blockedCumCounts == single cumulative window (exact element selection, every row)") {
-    import org.apache.spark.sql.expressions.Window
-    // edge cases on purpose: duplicate counts, values straddling block
-    // boundaries (blockWidth = 10 → blocks 0/1/2), a single-element
-    // group, negative values (floor-block still monotonic), and a
-    // group whose values all land in one block
-    val counted = Seq(
-      ("A", -5.0, 2L), ("A", 0.0, 1L), ("A", 9.99, 3L), ("A", 10.0, 1L), ("A", 10.01, 4L), ("A", 25.0, 1L),
-      ("B", 7.0, 5L),
-      ("C", 1.0, 1L), ("C", 2.0, 1L), ("C", 3.0, 7L)
-    ).toDF("k", "v", "c")
-    val wCum = Window.partitionBy("k").orderBy(col("v").asc).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val expect = counted
-      .withColumn("cum", sum(col("c")).over(wCum))
-      .withColumn("cnt", sum(col("c")).over(Window.partitionBy("k")))
-      .select("k", "v", "c", "cum", "cnt")
-      .collect()
-      .map(r => (r.getString(0), r.getDouble(1)) -> (r.getLong(3), r.getLong(4)))
-      .toMap
-    val got = Windows
-      .blockedCumCounts(counted, "k", "v", blockWidth = 10L)
-      .select("k", "v", "c", "cum", "cnt")
-      .collect()
-    assert(got.length === expect.size)
-    got.foreach { r =>
-      val key = (r.getString(0), r.getDouble(1))
-      assert((r.getLong(3), r.getLong(4)) === expect(key), s"cum/cnt mismatch at $key")
-    }
-  }
-
-  test("blockedCumCounts == single window on real lineitem prices (sf0.001)") {
-    import org.apache.spark.sql.expressions.Window
-    val counted = Tables
-      .lineitem(spark, sf0001)
-      .groupBy($"l_returnflag", $"l_extendedprice")
-      .agg(count(lit(1)).as("c"))
-    val wCum = Window
-      .partitionBy("l_returnflag")
-      .orderBy(col("l_extendedprice").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val expect = counted
-      .withColumn("cum", sum(col("c")).over(wCum))
-      .withColumn("cnt", sum(col("c")).over(Window.partitionBy("l_returnflag")))
-      .select(col("l_returnflag"), col("l_extendedprice").cast("string"), col("cum"), col("cnt"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
-      .toMap
-    val got = Windows
-      .blockedCumCounts(counted, "l_returnflag", "l_extendedprice", blockWidth = 2048L)
-      .select(col("l_returnflag"), col("l_extendedprice").cast("string"), col("cum"), col("cnt"))
-      .collect()
-    assert(got.length === expect.size)
-    got.foreach { r =>
-      val key = (r.getString(0), r.getString(1))
-      assert((r.getLong(2), r.getLong(3)) === expect(key), s"cum/cnt mismatch at $key")
-    }
-  }
-
   test("rollup: has grand-total row equal to the sum of leaf rows") {
     val rows = Windows.rollupQuery(spark, sf0001).collect()
     val grand = rows.filter(r => r.getString(0) == "ALL" && r.getString(1) == "ALL")

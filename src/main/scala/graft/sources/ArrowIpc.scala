@@ -7,14 +7,15 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 import scala.util.control.NonFatal
 
+import com.github.luben.zstd.Zstd
 import org.apache.arrow.compression.CommonsCompressionFactory
 import org.apache.arrow.flatbuf.{DictionaryBatch, Footer, Message, MessageHeader}
 import org.apache.arrow.memory.{ArrowBuf, BufferAllocator, RootAllocator}
 import org.apache.arrow.vector._
 import org.apache.arrow.vector.complex._
-import org.apache.arrow.vector.compression.{CompressionUtil, NoCompressionCodec}
+import org.apache.arrow.vector.compression.{CompressionCodec, CompressionUtil, NoCompressionCodec}
 import org.apache.arrow.vector.dictionary.Dictionary
-import org.apache.arrow.vector.ipc.{ArrowFileWriter, ArrowStreamReader, ArrowStreamWriter, ArrowWriter, ReadChannel}
+import org.apache.arrow.vector.ipc.{ArrowFileWriter, ArrowStreamWriter, ArrowWriter, ReadChannel}
 import org.apache.arrow.vector.ipc.message.{ArrowBlock, ArrowFieldNode, ArrowFooter, ArrowRecordBatch, IpcOption, MessageSerializer}
 import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit}
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema}
@@ -43,9 +44,10 @@ import org.apache.spark.sql.types._
   *    only the dictionaries a wanted field references;
   *  - the untrusted-bytes contract: any failure on hostile bytes —
   *    arrow-java, Netty, flatbuffers or the JVM — surfaces as
-  *    [[ArrowError]], and every read runs in its own allocator whose
-  *    limit is computed from the input length ([[allocator]]), so a
-  *    declared size the bytes cannot back is refused, not allocated. */
+  *    [[ArrowError]]; every read runs in its own allocator whose limit
+  *    grows only by the bytes read and what they provably decompress
+  *    to ([[Read]]), so a declared size the bytes cannot back is
+  *    refused, not allocated, and a failed read returns all it took. */
 object ArrowIpc {
 
   final class ArrowError(msg: String, cause: Throwable = null) extends RuntimeException(msg, cause)
@@ -61,15 +63,6 @@ object ArrowIpc {
       case e @ (NonFatal(_) | _: OutOfMemoryError | _: StackOverflowError) =>
         throw new ArrowError(s"arrow: malformed $what (${e.getClass.getSimpleName}: ${e.getMessage})", e)
     }
-
-  /** The allocation-bomb guard: a read of `inputBytes` may hold at most
-    * 16 MiB plus 256 bytes per input byte of Arrow memory. Uncompressed
-    * data needs about its own size and LZ4 frames cannot expand past
-    * ~255:1, so legitimate input fits; a declared row count or
-    * decompressed length the bytes cannot back (or a ZSTD body beyond
-    * that ratio) hits the limit and is refused before it is allocated. */
-  private def allocator(inputBytes: Long): BufferAllocator =
-    new RootAllocator((16L << 20) + 256L * inputBytes)
 
   private val Magic = "ARROW1".getBytes(UTF_8)
 
@@ -280,10 +273,138 @@ object ArrowIpc {
     b.array
   }
 
+  /** One read's Arrow memory, and the allocation-bomb guard. The
+    * allocator's limit starts at 16 MiB and grows only by what the
+    * input backs: each message body as it is read, and each compressed
+    * buffer by its checked decompressed length ([[unpacked]]). A
+    * declared size the bytes cannot back therefore hits the limit and
+    * is refused, not allocated, and the limit never exceeds a fixed
+    * multiple of the bytes read plus what they provably decompress to.
+    *
+    * Every body and every decompressed buffer is recorded. When a load
+    * fails part-way, arrow-java's loader drops the references it held
+    * to them; [[close]] returns those, after the vectors, so no failed
+    * read strands memory. */
+  private final class Read(ch: SeekableByteChannel) extends AutoCloseable {
+    private val alloc = new RootAllocator(16L << 20)
+    private val dicts = new java.util.HashMap[java.lang.Long, Dictionary]()
+    private val held = scala.collection.mutable.ArrayBuffer.empty[ArrowBuf]
+    private def hold(b: ArrowBuf): ArrowBuf = { held += b; b }
+
+    /** Room for `n` backed bytes: twice for the allocator's power-of-two
+      * rounding, twice again for the validity bitmaps arrow-java
+      * rebuilds where a writer elided them. */
+    private def grant(n: Long): Unit = alloc.setLimit(alloc.getLimit + 4 * n)
+
+    private val codecs: CompressionCodec.Factory = new CompressionCodec.Factory {
+      def createCodec(t: CompressionUtil.CodecType, level: Int): CompressionCodec = createCodec(t)
+      def createCodec(t: CompressionUtil.CodecType): CompressionCodec = {
+        val c = CommonsCompressionFactory.INSTANCE.createCodec(t)
+        new CompressionCodec {
+          def compress(a: BufferAllocator, b: ArrowBuf): ArrowBuf = c.compress(a, b)
+          def decompress(a: BufferAllocator, b: ArrowBuf): ArrowBuf = hold(c.decompress(a, b))
+          def getCodecType: CompressionUtil.CodecType = c.getCodecType
+        }
+      }
+    }
+
+    /** `fields` in memory form, registering the dictionaries they
+      * reference; only those are ever loaded. */
+    def memory(fields: Seq[Field]): Seq[Field] = fields.map(DictionaryUtility.toMemoryFormat(_, alloc, dicts))
+
+    def wantsDictionaries: Boolean = !dicts.isEmpty
+
+    /** The `len`-byte body at `at`, read into this read's memory and
+      * deserialized, for `use`. */
+    private def body[B <: AutoCloseable, T](at: Long, len: Long, deserialize: ArrowBuf => B)(use: B => T): T = {
+      grant(len)
+      val buf = hold(alloc.buffer(len))
+      ch.position(at)
+      req(new ReadChannel(ch).readFully(buf, len) == len, s"arrow: truncated body at $at")
+      Using.resource(deserialize(buf))(use)
+    }
+
+    /** Load dictionary batch `m` (body of `len` at `at`) if a wanted
+      * field references it; otherwise its body is never read. */
+    def dictionary(m: Message, at: Long, len: Long): Unit =
+      Option(dicts.get(m.header(new DictionaryBatch).asInstanceOf[DictionaryBatch].id)).foreach { d =>
+        val v = d.getVector
+        body(at, len, MessageSerializer.deserializeDictionaryBatch(m, _)) { db =>
+          req(!db.isDelta, "arrow: delta dictionaries are not supported")
+          load(new VectorSchemaRoot(java.util.List.of(v.getField), java.util.List.of(v), 0), db.getDictionary, len)
+        }
+      }
+
+    /** Rows of record batch `m` (body of `len` at `at`) holding only the
+      * top-level `fields` at `wanted`, whose memory form is `mem`. */
+    def batch(m: Message, at: Long, len: Long, fields: Seq[Field], wanted: Seq[Int], mem: Seq[Field]): Seq[Row] = {
+      val rows = Using.resource(VectorSchemaRoot.create(new Schema(mem.asJava), alloc)) { root =>
+        body(at, len, MessageSerializer.deserializeRecordBatch(m, _)) { b =>
+          Using.resource(prune(b, fields, wanted.toSet))(load(root, _, len))
+        }
+        rowsOf(root, dicts, alloc.getLimit)
+      }
+      held.filterInPlace(_.getReferenceManager.getRefCount > 0)
+      rows
+    }
+
+    /** Nothing backs a row of a null, run-end-encoded or field-less
+      * column, so no batch or field node may declare more rows than
+      * 8 per backed byte (a bit-packed column's density), past a floor
+      * real writers stay far below. */
+    private def load(root: VectorSchemaRoot, b: ArrowRecordBatch, bodyLen: Long): Unit = {
+      val backed = bodyLen + unpacked(b)
+      val most = math.max(1L << 26, 8 * backed)
+      (b.getLength.toLong +: b.getNodes.asScala.toSeq.map(_.getLength.toLong)).foreach { n =>
+        req(n >= 0 && n <= most, s"arrow: $n rows declared over $backed backed bytes")
+      }
+      grant(backed - bodyLen)
+      new VectorLoader(root, codecs).load(b)
+    }
+
+    def close(): Unit =
+      try dicts.values.forEach(_.getVector.close())
+      finally {
+        // the vectors are closed, so any reference left is one a failed load dropped
+        held.foreach { b => val r = b.getReferenceManager; if (r.getRefCount > 0) r.release(r.getRefCount) }
+        alloc.close()
+      }
+  }
+
+  /** The decompressed length of `b`'s compressed buffers, each 8-byte
+    * length prefix checked against what its frame can yield: an LZ4
+    * frame expands at most ~255:1; a ZSTD frame yields at most one
+    * 128 KiB block per 4 bytes, and where its header records a content
+    * size, that must be the declared one. */
+  private def unpacked(b: ArrowRecordBatch): Long = {
+    val codec = CompressionUtil.CodecType.fromCompressionType(b.getBodyCompression.getCodec)
+    if (codec == CompressionUtil.CodecType.NO_COMPRESSION) 0L
+    else b.getBuffers.asScala.iterator.filter(_.writerIndex > 0).map { buf =>
+      val n = buf.writerIndex - 8
+      req(n >= 0, s"arrow: compressed buffer of ${buf.writerIndex} bytes has no length prefix")
+      val len = buf.getLong(0)
+      if (len == -1 || len == 0) 0L // stored uncompressed, or empty
+      else {
+        val most =
+          if (codec == CompressionUtil.CodecType.LZ4_FRAME) 256 * n
+          else {
+            val head = new Array[Byte](math.min(n, 18L).toInt) // a frame header is at most 18 bytes
+            buf.getBytes(8, head)
+            val framed = Zstd.getFrameContentSize(head) // -1: the frame does not record it
+            req(framed == len || framed == -1, s"arrow: ZSTD buffer declares $len bytes but its frame $framed")
+            32768 * n
+          }
+        req(len > 0 && len <= math.min(most, Int.MaxValue), s"arrow: $n compressed bytes cannot back $len")
+        len
+      }
+    }.sum
+  }
+
   /** An IPC FILE opened for ranged reads. Opening touches only the
     * 8-byte head magic, the 10-byte tail and the footer flatbuffer — a
     * driver plans a 100 GB shard from three small reads — bounds every
-    * block extent against the file so fetch tasks can trust them, and
+    * block extent against the file and refuses overlapping blocks, so
+    * fetch tasks can trust them and no read covers a byte twice, and
     * checks the schema has a Spark face. */
   final class IpcFile(ch: SeekableByteChannel) {
     val footer: ArrowFooter = guarded("footer") {
@@ -295,11 +416,16 @@ object ArrowIpc {
       val fLen = ByteBuffer.wrap(tail).order(ByteOrder.LITTLE_ENDIAN).getInt(0)
       req(fLen > 0 && fLen <= len - 18, s"arrow: footer length $fLen out of range")
       val f = new ArrowFooter(Footer.getRootAsFooter(ByteBuffer.wrap(read(ch, len - 10 - fLen, fLen))))
-      (f.getDictionaries.asScala ++ f.getRecordBatches.asScala).foreach { b =>
+      val blocks = (f.getDictionaries.asScala ++ f.getRecordBatches.asScala).toSeq.sortBy(_.getOffset)
+      blocks.foreach { b =>
         // overflow-safe: subtract the bounded lengths instead of summing hostile ones
         req(b.getOffset >= 8 && b.getMetadataLength > 0 && b.getBodyLength >= 0 &&
           b.getOffset <= len - 10 - fLen - b.getMetadataLength - b.getBodyLength,
           s"arrow: block extent (${b.getOffset},${b.getMetadataLength},${b.getBodyLength}) outside file of $len")
+      }
+      blocks.zip(blocks.drop(1)).foreach { case (a, b) =>
+        req(a.getOffset + a.getMetadataLength + a.getBodyLength <= b.getOffset,
+          s"arrow: footer blocks at ${a.getOffset} and ${b.getOffset} overlap")
       }
       f
     }
@@ -308,42 +434,19 @@ object ArrowIpc {
     def batches: Int = footer.getRecordBatches.size
 
     /** Rows of record batch `i` holding only the top-level fields at
-      * `wanted` (schema positions, in schema order). */
+      * `wanted` (schema positions, in schema order). Dictionary blocks
+      * no wanted field references are skipped on their metadata alone. */
     def rows(i: Int, wanted: Seq[Int]): Seq[Row] = guarded("record batch") {
       val fields = schema.getFields.asScala.toIndexedSeq
-      val blk = footer.getRecordBatches.get(i)
-      val blocks = blk +: footer.getDictionaries.asScala.toSeq
-      Using.resource(allocator(blocks.map(b => b.getMetadataLength + b.getBodyLength).sum)) { alloc =>
-        val dicts = new java.util.HashMap[java.lang.Long, Dictionary]()
-        try {
-          val memory = wanted.map(w => DictionaryUtility.toMemoryFormat(fields(w), alloc, dicts))
-          loadDictionaries(dicts)
-          Using.resource(VectorSchemaRoot.create(new Schema(memory.asJava), alloc)) { root =>
-            val m = header(blk, MessageHeader.RecordBatch)
-            Using.resource(body(blk, alloc)(MessageSerializer.deserializeRecordBatch(m, _))) { b =>
-              Using.resource(prune(b, fields, wanted.toSet))(new VectorLoader(root, CommonsCompressionFactory.INSTANCE).load)
-            }
-            rowsOf(root, dicts, alloc.getLimit)
-          }
-        } finally dicts.values.forEach(_.getVector.close())
+      Using.resource(new Read(ch)) { r =>
+        val mem = r.memory(wanted.map(fields))
+        if (r.wantsDictionaries) footer.getDictionaries.forEach { blk =>
+          r.dictionary(header(blk, MessageHeader.DictionaryBatch), blk.getOffset + blk.getMetadataLength, blk.getBodyLength)
+        }
+        val blk = footer.getRecordBatches.get(i)
+        r.batch(header(blk, MessageHeader.RecordBatch), blk.getOffset + blk.getMetadataLength, blk.getBodyLength, fields, wanted, mem)
       }
     }
-
-    /** Load the dictionaries in `dicts` (the ones wanted fields
-      * reference); every other dictionary block is skipped on its
-      * metadata alone, body unread. */
-    private def loadDictionaries(dicts: java.util.Map[java.lang.Long, Dictionary]): Unit =
-      if (!dicts.isEmpty) footer.getDictionaries.forEach { blk =>
-        val m = header(blk, MessageHeader.DictionaryBatch)
-        Option(dicts.get(m.header(new DictionaryBatch).asInstanceOf[DictionaryBatch].id)).foreach { d =>
-          val v = d.getVector
-          Using.resource(body(blk, v.getAllocator)(MessageSerializer.deserializeDictionaryBatch(m, _))) { db =>
-            req(!db.isDelta, "arrow: delta dictionaries are not supported")
-            new VectorLoader(new VectorSchemaRoot(java.util.List.of(v.getField), java.util.List.of(v), 0),
-              CommonsCompressionFactory.INSTANCE).load(db.getDictionary)
-          }
-        }
-      }
 
     /** Block `blk`'s message flatbuffer, from its metadata bytes alone:
       * the 8-byte continuation + length prefix (4-byte legacy framing),
@@ -354,19 +457,6 @@ object ArrowIpc {
       val m = Message.getRootAsMessage(meta.slice().order(ByteOrder.LITTLE_ENDIAN))
       req(m.headerType == expected, s"arrow: block at ${blk.getOffset} holds message type ${m.headerType}, not $expected")
       m
-    }
-
-    /** Read block `blk`'s body into a buffer of `alloc` and hand it to
-      * `deserialize`, which takes ownership once it succeeds; a failure
-      * releases it here (arrow-java's own block reader leaks its buffer
-      * when the message it frames is malformed). */
-    private def body[T](blk: ArrowBlock, alloc: BufferAllocator)(deserialize: ArrowBuf => T): T = {
-      val buf = alloc.buffer(blk.getBodyLength)
-      try {
-        ch.position(blk.getOffset + blk.getMetadataLength)
-        req(new ReadChannel(ch).readFully(buf, blk.getBodyLength) == blk.getBodyLength, s"arrow: truncated body at ${blk.getOffset}")
-        deserialize(buf)
-      } catch { case e: Throwable => buf.close(); throw e }
     }
   }
 
@@ -416,36 +506,48 @@ object ArrowIpc {
   }
 
   /** Decode a whole STREAM-format payload (`.arrows`). Streams have no
-    * footer, and arrow-java sizes each message's metadata buffer from
-    * its length prefix before reading it, so every prefix and body
-    * length is first bounded against the bytes actually present. */
+    * footer, so the messages are walked in order — each length prefix
+    * and body length bounded against the bytes actually present — and
+    * their bodies load through the same [[Read]] as a file's blocks. A
+    * dictionary batch replaces the dictionary for the batches after it. */
   def readStreamBytes(bytes: Array[Byte]): (Schema, Seq[Seq[Row]]) = guarded("stream") {
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    var p = 0L
-    while (p + 4 <= bytes.length) {
-      // continuation + length, or the legacy bare length
-      val at = if (bb.getInt(p.toInt) == MessageSerializer.IPC_CONTINUATION_TOKEN) p + 8 else p + 4
-      req(at <= bytes.length, "arrow: truncated message prefix")
-      val n = bb.getInt(at.toInt - 4)
-      if (n == 0) p = bytes.length // end-of-stream marker
-      else {
-        req(n > 0 && n <= bytes.length - at, s"arrow: message length $n beyond the stream")
-        val body = Message.getRootAsMessage(
-          bb.duplicate().position(at.toInt).limit((at + n).toInt).slice().order(ByteOrder.LITTLE_ENDIAN)).bodyLength
-        req(body >= 0 && body <= bytes.length - at - n, s"arrow: message body $body beyond the stream")
-        p = at + n + body
+    Using.resource(new Read(new ByteArrayReadableSeekableByteChannel(bytes))) { r =>
+      var schema: Option[(Schema, Seq[Field])] = None
+      val batches = Vector.newBuilder[Seq[Row]]
+      var p = 0L
+      while (p + 4 <= bytes.length) {
+        // continuation + length, or the legacy bare length
+        val at = if (bb.getInt(p.toInt) == MessageSerializer.IPC_CONTINUATION_TOKEN) p + 8 else p + 4
+        req(at <= bytes.length, "arrow: truncated message prefix")
+        val n = bb.getInt(at.toInt - 4)
+        if (n == 0) p = bytes.length // end-of-stream marker
+        else {
+          req(n > 0 && n <= bytes.length - at, s"arrow: message length $n beyond the stream")
+          val m = Message.getRootAsMessage(
+            bb.duplicate().position(at.toInt).limit((at + n).toInt).slice().order(ByteOrder.LITTLE_ENDIAN))
+          val body = m.bodyLength
+          req(body >= 0 && body <= bytes.length - at - n, s"arrow: message body $body beyond the stream")
+          def declared = schema.getOrElse(fail(s"arrow: stream message type ${m.headerType} before its schema"))
+          m.headerType match {
+            case MessageHeader.Schema =>
+              req(schema.isEmpty, "arrow: stream declares a second schema")
+              val s = MessageSerializer.deserializeSchema(m)
+              sparkSchema(s)
+              schema = Some((s, r.memory(s.getFields.asScala.toSeq)))
+            case MessageHeader.DictionaryBatch =>
+              declared
+              r.dictionary(m, at + n, body)
+            case MessageHeader.RecordBatch =>
+              val (s, mem) = declared
+              val fields = s.getFields.asScala.toIndexedSeq
+              batches += r.batch(m, at + n, body, fields, fields.indices, mem)
+            case t => fail(s"arrow: unexpected message type $t in a stream")
+          }
+          p = at + n + body
+        }
       }
-    }
-    Using.resource(allocator(bytes.length)) { alloc =>
-      Using.resource(new ArrowStreamReader(new java.io.ByteArrayInputStream(bytes), alloc, CommonsCompressionFactory.INSTANCE)) { r =>
-        val root = r.getVectorSchemaRoot
-        val schema = new Schema(root.getSchema.getFields.asScala
-          .map(DictionaryUtility.toMessageFormat(_, r, new java.util.HashSet[java.lang.Long])).asJava)
-        sparkSchema(schema)
-        val batches = Vector.newBuilder[Seq[Row]]
-        while (r.loadNextBatch()) batches += rowsOf(root, r.getDictionaryVectors, alloc.getLimit)
-        (schema, batches.result())
-      }
+      (schema.getOrElse(fail("arrow: stream has no schema"))._1, batches.result())
     }
   }
 

@@ -100,12 +100,12 @@ class ArrowFixtureSpec extends AnyFunSuite {
     }
   }
 
-  test("comp_lz4.arrow: pyarrow LZ4_FRAME bodies decode via arrow-compression") {
+  test("comp_lz4.arrow: pyarrow LZ4_FRAME bodies decode via the in-tree codec") {
     val (schema, batches) = ArrowIpc.readFileBytes(fixture("comp_lz4.arrow"))
     checkBig(schema, batches)
   }
 
-  test("comp_zstd.arrow: pyarrow ZSTD bodies decode via arrow-compression") {
+  test("comp_zstd.arrow: pyarrow ZSTD bodies decode via the in-tree codec") {
     val (schema, batches) = ArrowIpc.readFileBytes(fixture("comp_zstd.arrow"))
     checkBig(schema, batches)
   }

@@ -196,7 +196,7 @@ class ArrowIpcSpec extends AnyFunSuite {
     } finally a.close()
   }
 
-  test("body compression: Arrow Java lz4/zstd writers -> our reader (arrow-compression)") {
+  test("body compression: Arrow Java lz4/zstd writers -> our reader (in-tree codecs)") {
     import org.apache.arrow.vector._
     import org.apache.arrow.compression.CommonsCompressionFactory
     import org.apache.arrow.vector.compression.CompressionUtil
@@ -474,40 +474,137 @@ class ArrowIpcSpec extends AnyFunSuite {
     assert(mutated == 600)
   }
 
-  test("allocation bombs: declared rows without backing bytes refuse before allocating") {
-    // A few bytes of body cannot legitimately carry 100M rows: loading
-    // them means sizing buffers for 100M values, which the read's
-    // length-derived allocator limit refuses. Craft by patching a
-    // valid 4-row file's RecordBatch length field (node lengths live
-    // in the metadata flatbuffer as i64 pairs; scan-and-patch both
-    // occurrences).
-    val schema = ArrowIpc.arrowSchema(StructType(Seq(StructField("x", LongType))))
-    val good = ArrowIpc.writeBytes(schema, Seq(Seq(Row(1L), Row(2L), Row(null), Row(4L))))
-    // patch every little-endian i64 equal to 4 in the batch message
-    // region to 100,000,000 (rows + node length + null-count stays)
-    val bomb = good.clone()
+  private def causes(t: Throwable): Seq[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+
+  /** `good` with every little-endian i64 equal to `from` set to `to`
+    * (the batch length and the field-node lengths live in the batch
+    * metadata as i64s), and how many were patched. */
+  private def patchI64(good: Array[Byte], from: Long, to: Long): (Array[Byte], Int) = {
+    val out = good.clone()
     var patched = 0
-    for (p <- 0 until bomb.length - 8) {
-      val isFour = (0 until 8).forall(j => bomb(p + j) == (if (j == 0) 4 else 0))
-      if (isFour) {
-        val v = 100000000L
-        for (j <- 0 until 8) bomb(p + j) = ((v >> (8 * j)) & 0xff).toByte
+    for (p <- 0 until out.length - 8) {
+      if ((0 until 8).forall(j => out(p + j) == ((from >> (8 * j)) & 0xff).toByte)) {
+        for (j <- 0 until 8) out(p + j) = ((to >> (8 * j)) & 0xff).toByte
         patched += 1
       }
     }
-    assert(patched >= 2, s"expected to patch rows+node length, got $patched")
-    val before = Runtime.getRuntime.totalMemory() - Runtime.getRuntime.freeMemory()
-    def causes(t: Throwable): Seq[Throwable] = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
-    try { ArrowIpc.readFileBytes(bomb); fail("bomb decoded silently") }
+    (out, patched)
+  }
+
+  /** Decoding `bytes` must raise ArrowError and nothing else. */
+  private def refused(bytes: Array[Byte], what: String, read: Array[Byte] => Any = ArrowIpc.readFileBytes): ArrowIpc.ArrowError =
+    try { read(bytes); fail(s"$what decoded silently") }
     catch {
-      case e: ArrowIpc.ArrowError =>
-        assert(causes(e).exists(_.isInstanceOf[org.apache.arrow.memory.OutOfMemoryException]),
-          s"expected the allocator limit to refuse, got $e")
+      case e: ArrowIpc.ArrowError => e
       case e: org.scalatest.exceptions.TestFailedException => throw e
-      case e: Throwable => fail(s"bomb escaped as ${e.getClass.getName}: ${e.getMessage}")
+      case e: Throwable => fail(s"$what escaped as ${e.getClass.getName}: ${e.getMessage}")
     }
-    val after = Runtime.getRuntime.totalMemory() - Runtime.getRuntime.freeMemory()
-    assert(after - before < (512L << 20), s"bomb allocated ${(after - before) >> 20} MB before failing")
+
+  private def heapUsed(): Long = Runtime.getRuntime.totalMemory() - Runtime.getRuntime.freeMemory()
+
+  test("allocation bombs: declared rows without backing bytes refuse before allocating") {
+    // A few bytes of body cannot legitimately carry 100M rows. Craft by
+    // patching a valid 4-row file's batch length and node length.
+    val schema = ArrowIpc.arrowSchema(StructType(Seq(StructField("x", LongType))))
+    val good = ArrowIpc.writeBytes(schema, Seq(Seq(Row(1L), Row(2L), Row(null), Row(4L))))
+    val before = heapUsed()
+    // past the unbacked-row floor: refused on the declared count alone
+    val (bomb, patched) = patchI64(good, 4, 100000000L)
+    assert(patched >= 2, s"expected to patch rows+node length, got $patched")
+    val e = refused(bomb, "100M-row bomb")
+    assert(e.getMessage.contains("100000000 rows declared"), s"expected the row check to refuse, got $e")
+    // under the floor: arrow-java sizes the column for 60M rows, which
+    // the read's allocator limit refuses
+    val under = refused(patchI64(good, 4, 60000000L)._1, "60M-row bomb")
+    assert(causes(under).exists(_.isInstanceOf[org.apache.arrow.memory.OutOfMemoryException]),
+      s"expected the allocator limit to refuse, got $under")
+    assert(heapUsed() - before < (512L << 20), s"bombs allocated ${(heapUsed() - before) >> 20} MB before failing")
+  }
+
+  test("allocation bombs: null, run-end-encoded and zero-column batches cannot declare unbacked rows") {
+    import org.apache.arrow.vector.VectorSchemaRoot
+    import org.apache.arrow.vector.ipc.ArrowFileWriter
+    // columns that no buffer backs: arrow-java allocates nothing for
+    // them, so only the declared-row check stands between a patched
+    // length and a billion materialized rows. Three rows, as no buffer
+    // offset or length in these files is 3.
+    def arrowJava(s: org.apache.arrow.vector.types.pojo.Schema): Array[Byte] = {
+      val a = alloc()
+      try {
+        val root = VectorSchemaRoot.create(s, a)
+        try {
+          val bos = new java.io.ByteArrayOutputStream()
+          val w = new ArrowFileWriter(root, null, java.nio.channels.Channels.newChannel(bos))
+          w.start(); root.setRowCount(3); w.writeBatch(); w.end(); w.close()
+          bos.toByteArray
+        } finally root.close()
+      } finally a.close()
+    }
+    val ree = schema(field("r", nullable = false, ArrowType.RunEndEncoded.INSTANCE,
+      field("run_ends", nullable = false, new ArrowType.Int(32, true)),
+      field("values", nullable = false, new ArrowType.Int(64, true))))
+    val cases = Seq(
+      "null column" -> arrowJava(schema(field("n", nullable = true, ArrowType.Null.INSTANCE))),
+      "zero-column batch" -> arrowJava(schema()),
+      "run-end-encoded column" -> ArrowIpc.writeBytes(ree, Seq(Seq.fill(3)(Row(7L)))))
+    val before = heapUsed()
+    for ((what, good) <- cases) {
+      assert(flat(ArrowIpc.readFileBytes(good)._2).length == 3, what)
+      val (bomb, patched) = patchI64(good, 3, 1L << 30)
+      assert(patched >= 1, what)
+      val e = refused(bomb, what)
+      assert(e.getMessage.contains(s"${1L << 30} rows declared"), s"$what: expected the row check to refuse, got $e")
+    }
+    assert(heapUsed() - before < (512L << 20), s"bombs allocated ${(heapUsed() - before) >> 20} MB before failing")
+  }
+
+  test("compressed bodies far past 256:1 read back (the limit follows the frames, not a ratio)") {
+    // 20 MB of int64 zeros: ZSTD packs it well past 1000:1, LZ4 near 255:1
+    val n = 2500000
+    val zero = Row(0L)
+    val schema = ArrowIpc.arrowSchema(StructType(Seq(StructField("z", LongType, nullable = false))))
+    for (codec <- Seq("zstd", "lz4")) {
+      val bytes = ArrowIpc.writeBytes(schema, Seq(Seq.fill(n)(zero)), codec)
+      if (codec == "zstd") assert(256L * bytes.length < 8L * n, s"zstd file of ${bytes.length} bytes is not past 256:1")
+      val rows = flat(ArrowIpc.readFileBytes(bytes)._2)
+      assert(rows.length == n && rows.forall(_.getLong(0) == 0L), codec)
+    }
+    // a ZSTD length prefix that disagrees with its frame's recorded
+    // content size refuses before anything is sized from it
+    val small = ArrowIpc.writeBytes(schema, Seq(Seq.fill(64)(zero)), "zstd")
+    val frame = small.indices.find(i => small.slice(i, i + 4).sameElements(Array(0x28, 0xb5, 0x2f, 0xfd).map(_.toByte))).get
+    val declared = java.nio.ByteBuffer.wrap(small).order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong(frame - 8)
+    val lying = small.clone()
+    lying(frame - 7) = (lying(frame - 7) + 1).toByte // declares 256 bytes more than the frame
+    assert(refused(lying, "lying prefix").getMessage.contains(s"declares ${declared + 256} bytes but its frame $declared"))
+  }
+
+  test("failed compressed reads return all their memory") {
+    // a body that fails part-way through decompression must not strand
+    // the buffers arrow-java already decompressed: the read's allocator
+    // would then close with memory outstanding and report a leak
+    def leaked(t: Throwable): Boolean =
+      causes(t).exists(c => String.valueOf(c.getMessage).contains("Memory was leaked") || c.getSuppressed.exists(leaked))
+    val rows = laneRows(64)
+    var failures = 0
+    for (codec <- Seq("zstd", "lz4"); file <- Seq(true, false)) {
+      val good = ArrowIpc.writeBytes(laneSchema, Seq(rows, rows), codec, file)
+      val read: Array[Byte] => Any = if (file) ArrowIpc.readFileBytes else ArrowIpc.readStreamBytes
+      val rnd = new scala.util.Random(20261018L)
+      for (_ <- 0 until 150) {
+        val b = good.clone()
+        val p = rnd.nextInt(b.length)
+        b(p) = (b(p) ^ (1 + rnd.nextInt(255))).toByte
+        try { read(b); () }
+        catch {
+          case e: ArrowIpc.ArrowError =>
+            failures += 1
+            assert(!leaked(e), s"$codec ${if (file) "file" else "stream"} read leaked: $e")
+        }
+      }
+    }
+    assert(failures > 100, s"only $failures mutations failed")
   }
 
   test("writer refusals: dictionary fields and unsupported types refuse loudly") {

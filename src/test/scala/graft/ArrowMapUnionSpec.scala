@@ -79,7 +79,7 @@ class ArrowMapUnionSpec extends AnyFunSuite {
     checkMapFixture(schema, batches, 37)
   }
 
-  test("map_zstd.arrow: compressed map bodies decode via arrow-compression") {
+  test("map_zstd.arrow: compressed map bodies decode via the in-tree codec") {
     val (schema, batches) = ArrowIpc.readFileBytes(fixture("map_zstd.arrow"))
     checkMapFixture(schema, batches, 37)
   }

@@ -271,6 +271,34 @@ class ArrowSourceSpec extends AnyFunSuite {
     intercept[ArrowIpc.ArrowError] { new ArrowIpc.IpcFile(new ByteArrayReadableSeekableByteChannel(bomb)).footer }
   }
 
+  test("hostile footer: repeated or overlapping blocks refuse at footer parse") {
+    import org.apache.arrow.vector.ipc.message.{ArrowBlock, ArrowFooter}
+    // listing one block many times would let a read cover the same
+    // bytes over and over; disjoint blocks bound every read by the file
+    val good = ArrowIpc.writeBytes(ArrowIpc.arrowSchema(StructType(Seq(StructField("x", LongType)))),
+      Seq(Seq(Row(1L), Row(2L)), Seq(Row(3L))))
+    val le = java.nio.ByteOrder.LITTLE_ENDIAN
+    val fLen = java.nio.ByteBuffer.wrap(good).order(le).getInt(good.length - 10)
+    val footer = new ArrowFooter(org.apache.arrow.flatbuf.Footer.getRootAsFooter(
+      java.nio.ByteBuffer.wrap(good.slice(good.length - 10 - fLen, good.length - 10))))
+    def refooter(batches: Seq[ArrowBlock]): Array[Byte] = {
+      val fbb = new com.google.flatbuffers.FlatBufferBuilder()
+      fbb.finish(new ArrowFooter(footer.getSchema, footer.getDictionaries, java.util.List.of(batches: _*)).writeTo(fbb))
+      val fb = fbb.sizedByteArray()
+      good.take(good.length - 10 - fLen) ++ fb ++
+        java.nio.ByteBuffer.allocate(4).order(le).putInt(fb.length).array ++ "ARROW1".getBytes("UTF-8")
+    }
+    def open(b: Array[Byte]) = new ArrowIpc.IpcFile(new ByteArrayReadableSeekableByteChannel(b))
+    val Seq(b0, b1) = (0 until 2).map(footer.getRecordBatches.get)
+    assert(open(refooter(Seq(b0, b1))).rows(1, Seq(0)).map(_.getLong(0)) == Seq(3L))
+    for ((what, blocks) <- Seq(
+        "repeated" -> Seq.fill(1000)(b0),
+        "overlapping" -> Seq(b0, new ArrowBlock(b0.getOffset + 8, b0.getMetadataLength, b0.getBodyLength)))) {
+      val e = intercept[ArrowIpc.ArrowError] { open(refooter(blocks)) }
+      assert(e.getMessage.contains("overlap"), s"$what: $e")
+    }
+  }
+
   test("uint64 round-trip: decimal(20,0) carrier writes back as real arrow u64") {
     val dir = java.nio.file.Files.createTempDirectory("arrowu64").resolve("out").toString
     val df = spark.sql(

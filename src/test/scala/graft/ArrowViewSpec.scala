@@ -47,7 +47,7 @@ class ArrowViewSpec extends AnyFunSuite {
     checkViews(schema, batches, 37)
   }
 
-  test("views_zstd.arrow: compressed view bodies decode via arrow-compression") {
+  test("views_zstd.arrow: compressed view bodies decode via the in-tree codec") {
     val (schema, batches) = ArrowIpc.readFileBytes(fixture("views_zstd.arrow"))
     checkViews(schema, batches, 37)
   }

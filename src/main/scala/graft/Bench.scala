@@ -28,8 +28,8 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     val (line, errors) = run(spark, sfDir, SparkEntry.queries.toSeq)
     println(line)
-    // Self-capture: the driver tails stdout and has truncated the head
-    // two rounds running; the file copy preserves every entry.
+    // Self-capture: a caller that keeps only the tail of stdout loses
+    // the head of this long line; the file copy preserves every entry.
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), line + "\n")
     catch { case _: Throwable => () }
     spark.stop()

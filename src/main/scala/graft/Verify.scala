@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. A failing lane
+  * plus oracle_sql.json, for the DuckDB compare in tools/check.py. A failing lane
   * does not stop the dump; the run exits 1 naming every failed lane. */
 object Verify {
   def main(args: Array[String]): Unit = {
